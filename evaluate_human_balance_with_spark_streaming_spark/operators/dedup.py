@@ -1110,10 +1110,10 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
             "(clique-like near-dup graphs converge in 1-2 rounds; long "
             "chains need ~diameter/2)"
         )
-    # The final frame reads the last round's managed-persisted union
-    # blocks (already materialized by its convergence count); the
-    # managed lifecycle frees every round's cache after the consuming
-    # query has been evaluated.
+    # The final frame reads the last round's lazily localCheckpointed
+    # union (its blocks were computed by the convergence count). The
+    # managed lifecycle does not own these blocks: Spark's ContextCleaner
+    # drops each round's checkpoint RDD once nothing references it.
     return mapping.select("node", F.col("label").alias("cluster_id"))
 
 

@@ -35,6 +35,34 @@ RUNTIME_CONF = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
+# Spark's default checkpoint manager goes through Hadoop's FileContext.
+# Without a native libhadoop, Hadoop's local filesystem forks `readlink`
+# for every path of a rename and `chmod` for every file create, so each
+# micro-batch forks about a hundred processes for its offset and commit
+# logs and its state-store deltas (4 stores per shuffle partition on the
+# stream-stream join). The FileSystem-based manager renames in-process
+# (file creates still fork `chmod`).
+# Its createAtomic is a temp file plus FileSystem.rename, which is atomic
+# only on a local filesystem, so it is set only for sessions whose
+# Hadoop default filesystem is `file:`; HDFS and object-store
+# deployments keep FileContext. Not covered: an explicit `hdfs://`
+# checkpoint location on a session whose default filesystem is local.
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def checkpoint_conf(default_fs: str) -> dict[str, str]:
+    """The checkpoint-manager conf for a session whose Hadoop
+    ``fs.defaultFS`` is ``default_fs``: the FileSystem-based manager on
+    a local default filesystem, nothing (Spark's FileContext default)
+    otherwise."""
+    if default_fs.startswith("file:"):
+        return {CHECKPOINT_MANAGER_KEY: FS_CHECKPOINT_MANAGER}
+    return {}
+
 
 def default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -56,13 +84,28 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     shuffle partitions and a 10 MB broadcast threshold — exactly the
     local overhead get_spark's builder eliminates). A value the owner
     set deliberately (tests at 8, bench at 32, connected_components'
-    temporary 4-pin) is never overridden."""
+    temporary 4-pin) is never overridden.
+
+    The checkpoint manager (see ``checkpoint_conf``) is chosen here and
+    nowhere else; an explicitly set manager is kept."""
     for key, value in RUNTIME_CONF.items():
         try:
             spark.conf.set(key, value)
         except Exception:
             # Some confs may be fixed by the session owner; never fail.
             pass
+    try:
+        # The session's own Hadoop conf: a session-level fs.defaultFS
+        # overrides the context's.
+        default_fs = (
+            spark._jsparkSession.sessionState().newHadoopConf().get("fs.defaultFS")
+        )
+        for key, value in checkpoint_conf(default_fs or "").items():
+            if spark.conf.get(key, None) is None:
+                spark.conf.set(key, value)
+    except Exception:
+        # No JVM handle (e.g. Spark Connect): keep Spark's default.
+        pass
     sizing = {
         "spark.sql.shuffle.partitions": (
             {"200"},
@@ -110,10 +153,12 @@ def get_spark(
         # exhausting executor heap — the right choice when the parity
         # join's unbounded state (SURVEY §2.4) actually grows large.
         # But every micro-batch pays a native open/commit/snapshot per
-        # store (partitions × stateful-ops × sides): measured 133s vs
-        # 36s for the same replay on the in-JVM HDFSBacked provider at
-        # test scale. Default to the JVM provider; flip the env var on
-        # a real cluster with big state.
+        # store (partitions × stateful-ops × sides), plus per-row native
+        # ingest. Interleaved on 4 cores at sf0.1, the 8 stream_*
+        # replays took 24.1-30.6 s on RocksDB vs 22.4-23.2 s on the
+        # in-JVM HDFSBacked provider, and the x10 flagship replay
+        # 1.5-2.1x as long. Default to the JVM provider; flip the env
+        # var on a real cluster with big state.
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."
@@ -138,4 +183,4 @@ def get_spark(
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return apply_runtime_conf(spark)

@@ -41,8 +41,12 @@ def _replay_scratch_dir() -> str | None:
     whole tree is deleted the moment the drain ends, so — like shuffle
     scratch — it belongs on the fastest local medium, not the durable
     one. A RAM-backed /dev/shm cut the sf0.1 watermarked-dedup replay
-    from 2.6 s to 1.5 s flat (the delta is pure fsync/IO latency on a
-    disk-backed /tmp). Production queries (start_query) keep their
+    from 2.6 s to 1.5 s flat by removing disk latency. The checkpoint
+    files cost more than I/O, though: without a native libhadoop,
+    Spark's default FileContext checkpoint manager forks
+    `readlink`/`chmod` for every file, on any medium. The
+    FileSystem-based manager set in session.apply_runtime_conf removes
+    most of those forks. Production queries (start_query) keep their
     EXPLICIT durable checkpoint_location — this only routes the
     self-deleting replay scratch. Override with
     SPARK_GRAFT_REPLAY_SCRATCH (any existing dir; e.g. a cluster's

@@ -9,7 +9,7 @@ the README's "state is a dial" claim into a measured table: unbounded
 state grows with input, the watermarked plan evicts and holds state
 ~flat, and the provider (HDFSBacked in-JVM vs RocksDB native,
 selected by SPARK_GRAFT_STATE_STORE before launch — it is builder-time
-conf, session.py:109-122) changes the cost/capacity point, not the
+conf in session.get_spark) changes the cost/capacity point, not the
 semantics.
 
 The per-micro-batch ``stateOperators`` feed comes from

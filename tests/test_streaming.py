@@ -682,3 +682,39 @@ def test_watermarked_flagship_tight_delay_actually_evicts_state(
         for r in stedi.flagship_pipeline_watermarked(cust_b, risk_b).collect()
     )
     assert got == expected
+
+
+def test_stream_replays_drain_in_multiple_data_batches(spark, sf_dir, monkeypatch):
+    """Every registered ``stream_*`` replay drains in at least 2
+    micro-batches that read input: a replay that collapsed into one
+    batch would stop exercising cross-batch state and would time one
+    batch's fixed cost instead of a stream's."""
+    from evaluate_human_balance_with_spark_streaming_spark import caching
+    from evaluate_human_balance_with_spark_streaming_spark.plans.registry import (
+        all_queries,
+    )
+    from evaluate_human_balance_with_spark_streaming_spark.streaming import (
+        stream_queries,
+    )
+
+    progress: dict[str, list[dict]] = {}
+    current = ""
+
+    def recording(*args, **kwargs):
+        assert "progress_out" not in kwargs
+        return run_to_memory(
+            *args, progress_out=progress.setdefault(current, []), **kwargs
+        )
+
+    monkeypatch.setattr(stream_queries, "run_to_memory", recording)
+    replays = {n: fn for n, fn in all_queries().items() if n.startswith("stream_")}
+    assert len(replays) == 8
+    for current, fn in replays.items():
+        fn(spark, sf_dir).count()
+        caching.release_managed()
+    batches = {
+        name: sum(1 for p in prog if p["numInputRows"] > 0)
+        for name, prog in progress.items()
+    }
+    assert set(batches) == set(replays)
+    assert {n: b for n, b in batches.items() if b < 2} == {}
