@@ -7,12 +7,28 @@ performance knob at its default. For a 100 TB deployment we want AQE,
 Arrow transfer for any pandas interchange, Kryo, a sane shuffle-partition
 count, and RocksDB-backed streaming state (bounded memory for the
 unbounded stream-stream join state the reference accumulates).
+
+Local sessions this process launches also put a small Hadoop local
+filesystem on the driver classpath (``jvm/NoForkLocalFileSystem.java``,
+see ``no_fork_fs_jar``). Its jar is derived from that committed source:
+it is compiled with the JDK's ``javac`` on first use and cached under
+the gitignored ``jvm/build/``.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import re
+import shutil
+import subprocess
+import sys
+import tempfile
+import zipfile
 
+import pyspark
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs we also apply defensively to externally-created
@@ -40,8 +56,9 @@ RUNTIME_CONF = {
 # for every path of a rename and `chmod` for every file create, so each
 # micro-batch forks about a hundred processes for its offset and commit
 # logs and its state-store deltas (4 stores per shuffle partition on the
-# stream-stream join). The FileSystem-based manager renames in-process
-# (file creates still fork `chmod`).
+# stream-stream join). The FileSystem-based manager renames in-process;
+# file creates go through `fs.file.impl`, which get_spark points at
+# NoForkLocalFileSystem where it can (see no_fork_fs_conf).
 # Its createAtomic is a temp file plus FileSystem.rename, which is atomic
 # only on a local filesystem, so it is set only for sessions whose
 # Hadoop default filesystem is `file:`; HDFS and object-store
@@ -62,6 +79,89 @@ def checkpoint_conf(default_fs: str) -> dict[str, str]:
     if default_fs.startswith("file:"):
         return {CHECKPOINT_MANAGER_KEY: FS_CHECKPOINT_MANAGER}
     return {}
+
+
+# Without a native libhadoop, Hadoop's RawLocalFileSystem also forks
+# `chmod` for every file (and `.crc`) it creates and every directory it
+# makes: offset, commit and source logs, sink files and metadata, and
+# each state-store delta with its checksum file. NoForkLocalFileSystem
+# sets the same modes in-process.
+JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+NO_FORK_FS_SOURCE = os.path.join(JVM_DIR, "NoForkLocalFileSystem.java")
+NO_FORK_FS_CLASS = "stedi.spark.NoForkLocalFileSystem"
+FS_FILE_IMPL_KEY = "spark.hadoop.fs.file.impl"
+CLASSPATH_KEY = "spark.driver.extraClassPath"
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+
+
+def _jar_cache_root() -> str:
+    build = os.path.join(JVM_DIR, "build")
+    try:
+        os.makedirs(build, exist_ok=True)
+    except OSError:
+        pass
+    return build if os.access(build, os.W_OK) else tempfile.gettempdir()
+
+
+def no_fork_fs_jar() -> str | None:
+    """Path of a jar holding NoForkLocalFileSystem, compiled from the
+    committed source against the Hadoop API jar Spark ships, or None
+    when ``javac`` or that jar is missing or the build fails.
+
+    The jar is cached in a directory named by a hash of the source and
+    the Hadoop jar's name, so an edit to either rebuilds it; it is
+    written to a temp file and renamed into place, so concurrent first
+    runs never see a partial jar."""
+    javac = shutil.which("javac")
+    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    hadoop = sorted(glob.glob(os.path.join(spark_home, "jars", "hadoop-client-api-*.jar")))
+    if not javac or not hadoop:
+        return None
+    with open(NO_FORK_FS_SOURCE, "rb") as f:
+        key = hashlib.sha256(f.read() + os.path.basename(hadoop[-1]).encode()).hexdigest()
+    cache = os.path.join(_jar_cache_root(), f"ehb-nofork-{key[:16]}")
+    jar = os.path.join(cache, "NoForkLocalFileSystem.jar")
+    if os.path.exists(jar):
+        return jar
+    try:
+        os.makedirs(cache, exist_ok=True)
+        scratch = tempfile.mkdtemp(dir=cache)
+        try:
+            subprocess.run(
+                [javac, "--release", "17", "-cp", hadoop[-1],
+                 "-d", scratch, NO_FORK_FS_SOURCE],
+                check=True, capture_output=True, timeout=300,
+            )
+            staged = os.path.join(scratch, "staged.jar")
+            with zipfile.ZipFile(staged, "w") as zf:
+                for name in sorted(glob.glob(os.path.join(scratch, "stedi", "spark", "*.class"))):
+                    zf.write(name, os.path.relpath(name, scratch))
+            os.replace(staged, jar)
+        finally:
+            shutil.rmtree(scratch, ignore_errors=True)
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return jar
+
+
+def no_fork_fs_conf(master: str) -> tuple[dict[str, str], str]:
+    """Launch conf that installs NoForkLocalFileSystem as the session's
+    ``file:`` filesystem, or ({}, why not).
+
+    The JVM's classpath is fixed when it starts and Hadoop's FileSystem
+    cache already holds a ``file:`` instance once a context runs, so
+    this applies only when this process is about to launch the JVM (no
+    PYSPARK_GATEWAY_PORT from spark-submit, no active context). Only a
+    ``local[...]`` master runs its executors in the driver JVM and so
+    on the driver's classpath."""
+    if os.environ.get("PYSPARK_GATEWAY_PORT") or SparkContext._active_spark_context:
+        return {}, "the JVM was launched before this session"
+    if not _LOCAL_MASTER.fullmatch(master):
+        return {}, f"master {master!r} runs executors outside the driver JVM"
+    jar = no_fork_fs_jar()
+    if not jar:
+        return {}, "javac or the Hadoop API jar is missing, or the build failed"
+    return {CLASSPATH_KEY: jar, FS_FILE_IMPL_KEY: NO_FORK_FS_CLASS}, ""
 
 
 def default_parallelism() -> int:
@@ -179,8 +279,15 @@ def get_spark(
     )
     for key, value in RUNTIME_CONF.items():
         builder = builder.config(key, value)
-    for key, value in (extra_conf or {}).items():
+    extra = extra_conf or {}
+    # A caller that sets either key owns the driver classpath.
+    owned = FS_FILE_IMPL_KEY in extra or CLASSPATH_KEY in extra
+    fs_conf, why_stock = ({}, "") if owned else no_fork_fs_conf(master)
+    for key, value in {**fs_conf, **extra}.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
+    if why_stock and spark.sparkContext.getConf().get(FS_FILE_IMPL_KEY) is None:
+        print(f"# ehb-spark: local files keep Hadoop's stock filesystem "
+              f"(a chmod fork per file): {why_stock}", file=sys.stderr)
     spark.sparkContext.setLogLevel("WARN")
     return apply_runtime_conf(spark)

@@ -45,8 +45,11 @@ def _replay_scratch_dir() -> str | None:
     files cost more than I/O, though: without a native libhadoop,
     Spark's default FileContext checkpoint manager forks
     `readlink`/`chmod` for every file, on any medium. The
-    FileSystem-based manager set in session.apply_runtime_conf removes
-    most of those forks. Production queries (start_query) keep their
+    FileSystem-based manager set in session.apply_runtime_conf renames
+    in-process, and sessions get_spark launches locally also create
+    files through session.NO_FORK_FS_CLASS, which sets their modes
+    in-process; other sessions still fork `chmod` per file created.
+    Production queries (start_query) keep their
     EXPLICIT durable checkpoint_location — this only routes the
     self-deleting replay scratch. Override with
     SPARK_GRAFT_REPLAY_SCRATCH (any existing dir; e.g. a cluster's

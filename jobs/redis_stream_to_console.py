@@ -5,8 +5,14 @@ reference's `sparkpyrediskafkastreamtoconsole.py`
 (submit-redis-kafka-streaming.sh).
 
 Usage:
-  spark-submit --packages org.apache.spark:spark-sql-kafka-0-10_2.13:4.0.0 \
+  spark-submit --packages org.apache.spark:spark-sql-kafka-0-10_2.13:4.1.2 \
       jobs/redis_stream_to_console.py [bootstrap_servers]
+
+Under spark-submit the JVM starts before get_spark runs, so the job
+keeps Hadoop's stock local filesystem, which forks `chmod` for every
+checkpoint file it creates, unless a local-master launch also passes
+`--driver-class-path <jar>` (the path session.no_fork_fs_jar() returns)
+and `--conf spark.hadoop.fs.file.impl=stedi.spark.NoForkLocalFileSystem`.
 """
 
 from __future__ import annotations

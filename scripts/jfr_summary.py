@@ -1,0 +1,118 @@
+#!/usr/bin/env python
+"""Summarize a JDK Flight Recorder recording of the engine's JVM.
+
+Reads the recording through ``jfr print --json`` (the JDK's own
+reader) and prints three tables:
+
+- ``jdk.ProcessStart``: processes the JVM forked, counted by thread and
+  by command, with path arguments folded to ``<path>`` and thread-pool
+  numbers to ``#`` (Hadoop's local filesystem forks ``chmod`` per file
+  created when it has no native libhadoop);
+- ``jdk.GarbageCollection``: collections by collector and cause, with
+  the sum and maximum of their pauses;
+- ``jdk.ExecutionSample``: the most frequent top frames of sampled
+  Java threads.
+
+Record with ``-XX:StartFlightRecording`` in the driver's Java options,
+or with ``jcmd <pid> JFR.start`` / ``JFR.dump filename=<file>`` on a
+running driver JVM.
+
+Usage:
+    python scripts/jfr_summary.py recording.jfr [--top N]
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import re
+import shutil
+import subprocess
+import sys
+from collections import Counter, defaultdict
+
+EVENTS = "jdk.ProcessStart,jdk.GarbageCollection,jdk.ExecutionSample"
+_UUID = re.compile(r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}")
+_ISO_DURATION = re.compile(r"PT(?:(\d+)H)?(?:(\d+)M)?(?:([\d.]+)S)?")
+
+
+def duration_ms(value) -> float:
+    """A JFR JSON duration (ISO-8601 like ``PT0.0042S``, or nanos) in ms."""
+    if isinstance(value, (int, float)):
+        return value / 1e6
+    m = _ISO_DURATION.fullmatch(str(value))
+    if not m:
+        return 0.0
+    h, mi, s = (float(g) if g else 0.0 for g in m.groups())
+    return (h * 3600 + mi * 60 + s) * 1000.0
+
+
+def thread_name(thread: dict | None) -> str:
+    """A thread's Java (or OS) name with query ids and pool numbers folded."""
+    name = (thread or {}).get("javaName") or (thread or {}).get("osName") or "?"
+    return re.sub(r"\d+", "#", _UUID.sub("<id>", name))
+
+
+def command_shape(command: str) -> str:
+    """A forked command line with its path arguments folded."""
+    return " ".join("<path>" if "/" in w else w for w in command.split())
+
+
+def top_frame(stack: dict | None) -> str:
+    frames = (stack or {}).get("frames") or []
+    if not frames:
+        return "?"
+    method = frames[0].get("method") or {}
+    cls = ((method.get("type") or {}).get("name") or "?").replace("/", ".")
+    return f"{cls}.{method.get('name', '?')}"
+
+
+def summarize(events: list[dict]) -> dict:
+    by_type: dict[str, list[dict]] = defaultdict(list)
+    for e in events:
+        by_type[e.get("type")].append(e.get("values") or {})
+    starts = by_type["jdk.ProcessStart"]
+    samples = by_type["jdk.ExecutionSample"]
+    gcs: dict[tuple[str, str], list[float]] = defaultdict(list)
+    for v in by_type["jdk.GarbageCollection"]:
+        gcs[v.get("name", "?"), v.get("cause", "?")].append(duration_ms(v.get("sumOfPauses")))
+    return {
+        "process_starts": len(starts),
+        "starts_by_thread": Counter(thread_name(v.get("eventThread")) for v in starts),
+        "starts_by_command": Counter(command_shape(v.get("command", "")) for v in starts),
+        "gc": {k: (len(p), sum(p), max(p)) for k, p in gcs.items()},
+        "samples": len(samples),
+        "top_frames": Counter(top_frame(v.get("stackTrace")) for v in samples),
+    }
+
+
+def _table(title: str, counts: Counter, top: int) -> None:
+    print(f"\n{title}")
+    for key, n in counts.most_common(top):
+        print(f"  {n:8d}  {key}")
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("recording")
+    ap.add_argument("--top", type=int, default=15, help="rows per table")
+    args = ap.parse_args()
+    jfr = shutil.which("jfr")
+    if not jfr:
+        print("jfr_summary: the JDK's `jfr` tool is not on PATH", file=sys.stderr)
+        return 2
+    out = subprocess.run([jfr, "print", "--json", "--stack-depth", "1", "--events", EVENTS,
+                          args.recording], check=True, capture_output=True, text=True).stdout
+    s = summarize(json.loads(out)["recording"]["events"])
+    print(f"process starts: {s['process_starts']}")
+    _table("process starts by thread", s["starts_by_thread"], args.top)
+    _table("process starts by command", s["starts_by_command"], args.top)
+    print("\ngarbage collections by collector and cause (count, pause sum ms, max pause ms)")
+    for (name, cause), (n, total, longest) in sorted(s["gc"].items(), key=lambda kv: -kv[1][0]):
+        print(f"  {n:8d}  {total:10.1f}  {longest:8.1f}  {name}: {cause}")
+    _table(f"top frames of {s['samples']} execution samples", s["top_frames"], args.top)
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -1,21 +1,28 @@
-"""Checkpoint manager scoping and restart of the stateful flagship join.
+"""Checkpoint manager scoping, the local filesystem checkpoint files go
+through, and restart of the stateful flagship join.
 
 Local sessions checkpoint through Spark's FileSystem-based manager
 (session.checkpoint_conf). Every way a session reaches the engine must
 carry it, and the stream-stream join must still deliver each event once
 across a stop and restart on the same checkpoint, since the manager
 decides how offset logs and state-store deltas are renamed into place.
+Sessions get_spark launches locally create those files through
+NoForkLocalFileSystem, which must set exactly the stock modes.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import subprocess
+import sys
 import tempfile
 import time
 from collections import Counter
 
 from conftest import envelope
+from pyspark import SparkContext
 
 from evaluate_human_balance_with_spark_streaming_spark.plans.stedi import (
     flagship_pipeline,
@@ -23,8 +30,12 @@ from evaluate_human_balance_with_spark_streaming_spark.plans.stedi import (
 from evaluate_human_balance_with_spark_streaming_spark.session import (
     CHECKPOINT_MANAGER_KEY,
     FS_CHECKPOINT_MANAGER,
+    FS_FILE_IMPL_KEY,
+    NO_FORK_FS_CLASS,
     apply_runtime_conf,
     checkpoint_conf,
+    no_fork_fs_conf,
+    no_fork_fs_jar,
 )
 from evaluate_human_balance_with_spark_streaming_spark.sources.files import (
     stream_json_dir,
@@ -33,6 +44,8 @@ from evaluate_human_balance_with_spark_streaming_spark.streaming.runner import (
     replay_session,
     start_query,
 )
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_checkpoint_manager_on_every_session_path(spark):
@@ -153,3 +166,124 @@ def test_flagship_join_restart_emits_each_event_once(spark):
     got = Counter(sink_rows())
     assert [r for r, n in got.items() if n > 1] == []
     assert set(got) == set(expected)
+
+
+# --- NoForkLocalFileSystem ---------------------------------------------
+
+
+def _file_fs(spark, cls: str, umask: str):
+    """A fresh, uncached ``file:`` filesystem of class ``cls`` whose
+    Hadoop umask is ``umask``."""
+    jvm = spark._jvm
+    conf = jvm.org.apache.hadoop.conf.Configuration(spark._jsc.hadoopConfiguration())
+    conf.set("fs.permissions.umask-mode", umask)
+    fs = jvm.org.apache.hadoop.util.ReflectionUtils.newInstance(
+        jvm.java.lang.Class.forName(cls), conf
+    )
+    fs.initialize(jvm.java.net.URI("file:///"), conf)
+    return fs
+
+
+def _modes(root: str) -> dict[str, int]:
+    return {
+        os.path.relpath(os.path.join(d, n), root): os.stat(os.path.join(d, n)).st_mode
+        for d, dirs, files in os.walk(root) for n in dirs + files
+    }
+
+
+def test_session_file_filesystem_is_no_fork(spark):
+    """The get_spark session's ``file:`` filesystem, the one every
+    checkpoint, source and sink file goes through, is the in-process
+    one (the exactly-once restart test above runs on it)."""
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
+        jvm.java.net.URI("file:///"), spark._jsc.hadoopConfiguration()
+    )
+    assert fs.getClass().getName() == NO_FORK_FS_CLASS
+    assert spark.sparkContext.getConf().get(FS_FILE_IMPL_KEY) == NO_FORK_FS_CLASS
+
+
+def test_no_fork_fs_sets_the_stock_modes(spark, tmp_path):
+    """Files, their .crc files and new directories, including a
+    directory under a setgid parent, get the modes a stock
+    LocalFileSystem gives them, under the same Hadoop umask."""
+    jvm = spark._jvm
+    trees = {}
+    stock_cls = "org.apache.hadoop.fs.LocalFileSystem"
+    for umask in ("022", "077", "002"):
+        for cls in (stock_cls, NO_FORK_FS_CLASS):
+            root = str(tmp_path / f"{umask}-{cls}")
+            os.makedirs(os.path.join(root, "sgid"))
+            os.chmod(os.path.join(root, "sgid"), 0o2775)
+            fs = _file_fs(spark, cls, umask)
+            fs.create(jvm.org.apache.hadoop.fs.Path(f"file://{root}/f")).close()
+            fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"file://{root}/d/e"))
+            fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"file://{root}/sgid/d"))
+            trees[umask, cls] = _modes(root)
+        stock, no_fork = trees[umask, stock_cls], trees[umask, NO_FORK_FS_CLASS]
+        assert {"f", ".f.crc", "d", "d/e", "sgid/d"} <= set(stock)
+        assert no_fork == stock, umask
+    assert trees["022", NO_FORK_FS_CLASS]["f"] & 0o7777 == 0o644
+    assert trees["077", NO_FORK_FS_CLASS]["d"] & 0o7777 == 0o700
+    assert trees["022", NO_FORK_FS_CLASS]["sgid/d"] & 0o7777 == 0o2755
+
+
+def test_no_fork_fs_sticky_bit_takes_the_stock_path(spark, tmp_path):
+    """A sticky-bit mode has no rwx string for java.nio, so it goes to
+    RawLocalFileSystem.setPermission; the mode still lands."""
+    jvm = spark._jvm
+    fs = _file_fs(spark, NO_FORK_FS_CLASS, "022")
+    path = jvm.org.apache.hadoop.fs.Path(f"file://{tmp_path}/t")
+    fs.mkdirs(path)
+    fs.setPermission(path, jvm.org.apache.hadoop.fs.permission.FsPermission("1777"))
+    assert os.stat(tmp_path / "t").st_mode & 0o7777 == 0o1777
+
+
+def test_no_javac_keeps_the_stock_filesystem(monkeypatch, tmp_path):
+    """Without javac the build helper returns nothing, and a session
+    launched by get_spark leaves fs.file.impl unset and says why."""
+    real_which = shutil.which
+    monkeypatch.setattr(
+        shutil, "which", lambda cmd, *a, **k: None if cmd == "javac" else real_which(cmd, *a, **k)
+    )
+    assert no_fork_fs_jar() is None
+    # get_spark itself, in a process that launches its own JVM.
+    script = tmp_path / "no_javac.py"
+    script.write_text(
+        "import shutil, sys\n"
+        f"sys.path.insert(0, {ROOT!r})\n"
+        "real = shutil.which\n"
+        "shutil.which = lambda cmd, *a, **k: None if cmd == 'javac' else real(cmd, *a, **k)\n"
+        "from evaluate_human_balance_with_spark_streaming_spark.session import get_spark\n"
+        "spark = get_spark('ehb-no-javac')\n"
+        "jvm = spark._jvm\n"
+        "fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI('file:///'),"
+        " spark._jsc.hadoopConfiguration())\n"
+        "impl = spark.sparkContext.getConf().get('spark.hadoop.fs.file.impl')\n"
+        "print(impl, fs.getClass().getName())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYSPARK_GATEWAY_PORT"}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_DRIVER_MEMORY="512m")
+    run = subprocess.run([sys.executable, str(script)], capture_output=True, text=True,
+                         env=env, timeout=300)
+    assert run.returncode == 0, run.stderr[-2000:]
+    impl, fs_class = run.stdout.split()[-2:]
+    assert impl == "None" and fs_class != NO_FORK_FS_CLASS
+    assert "keep Hadoop's stock filesystem" in run.stderr
+
+
+def test_no_fork_fs_only_when_this_process_launches_a_local_jvm(spark, monkeypatch):
+    """A running context (a session handed in, or a second get_spark)
+    and non-local masters keep the stock filesystem: the classpath is
+    fixed at launch, and cluster executors do not share the driver's."""
+    assert no_fork_fs_conf("local[2]")[0] == {}
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    for master in ("yarn", "spark://h:7077", "local-cluster[2,1,1024]"):
+        assert no_fork_fs_conf(master)[0] == {}
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+    assert no_fork_fs_conf("local[2]")[0] == {}
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT")
+    conf, _ = no_fork_fs_conf("local[*]")
+    assert conf[FS_FILE_IMPL_KEY] == NO_FORK_FS_CLASS
+    assert os.path.isfile(conf["spark.driver.extraClassPath"])
