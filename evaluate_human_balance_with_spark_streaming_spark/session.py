@@ -4,15 +4,21 @@ large multi-executor cluster.
 The reference creates bare sessions (``SparkSession.builder.appName(...)
 .getOrCreate()``, reference sparkpykafkajoin.py:56) and leaves every
 performance knob at its default. For a 100 TB deployment we want AQE,
-Arrow transfer for any pandas interchange, Kryo, a sane shuffle-partition
-count, and RocksDB-backed streaming state (bounded memory for the
-unbounded stream-stream join state the reference accumulates).
+Arrow transfer for any pandas interchange, Kryo and a sane
+shuffle-partition count. Streaming state stays in the JVM
+(HDFSBackedStateStoreProvider); ``SPARK_GRAFT_STATE_STORE=rocksdb``
+switches to RocksDB, which bounds memory for the unbounded
+stream-stream join state the reference accumulates but costs more per
+micro-batch (see the provider comment in ``get_spark``).
 
-Local sessions this process launches also put a small Hadoop local
-filesystem on the driver classpath (``jvm/NoForkLocalFileSystem.java``,
-see ``no_fork_fs_jar``). Its jar is derived from that committed source:
-it is compiled with the JDK's ``javac`` on first use and cached under
-the gitignored ``jvm/build/``.
+Local sessions this process launches also put one small jar on the
+driver classpath (see ``jvm_jar``), compiled from the committed
+``jvm/*.java`` with the JDK's ``javac`` on first use and cached under
+the gitignored ``jvm/build/``. It holds ``NoForkLocalFileSystem``, the
+``file:`` filesystem, which sets file modes without forking ``chmod``,
+and ``HadoopConfKryoRegistrator``, which Kryo-serializes the Hadoop
+confs Spark broadcasts as plain strings instead of through Java
+serialization's per-property gzip.
 """
 
 from __future__ import annotations
@@ -58,7 +64,7 @@ RUNTIME_CONF = {
 # logs and its state-store deltas (4 stores per shuffle partition on the
 # stream-stream join). The FileSystem-based manager renames in-process;
 # file creates go through `fs.file.impl`, which get_spark points at
-# NoForkLocalFileSystem where it can (see no_fork_fs_conf).
+# NoForkLocalFileSystem where it can (see jvm_conf).
 # Its createAtomic is a temp file plus FileSystem.rename, which is atomic
 # only on a local filesystem, so it is set only for sessions whose
 # Hadoop default filesystem is `file:`; HDFS and object-store
@@ -86,10 +92,17 @@ def checkpoint_conf(default_fs: str) -> dict[str, str]:
 # makes: offset, commit and source logs, sink files and metadata, and
 # each state-store delta with its checksum file. NoForkLocalFileSystem
 # sets the same modes in-process.
+# Spark's Kryo registration sends SerializableConfiguration through Java
+# serialization to Configuration.write, which gzips each of the ~1,100
+# default properties' sources; the stream-stream join broadcasts a fresh
+# one with every copy of its plan; a micro-batch of the live risk join
+# makes 19 broadcasts in all.
+# HadoopConfKryoRegistrator writes the properties as plain strings.
 JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
-NO_FORK_FS_SOURCE = os.path.join(JVM_DIR, "NoForkLocalFileSystem.java")
 NO_FORK_FS_CLASS = "stedi.spark.NoForkLocalFileSystem"
+KRYO_REGISTRATOR_CLASS = "stedi.spark.HadoopConfKryoRegistrator"
 FS_FILE_IMPL_KEY = "spark.hadoop.fs.file.impl"
+KRYO_REGISTRATOR_KEY = "spark.kryo.registrator"
 CLASSPATH_KEY = "spark.driver.extraClassPath"
 _LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
 
@@ -103,24 +116,29 @@ def _jar_cache_root() -> str:
     return build if os.access(build, os.W_OK) else tempfile.gettempdir()
 
 
-def no_fork_fs_jar() -> str | None:
-    """Path of a jar holding NoForkLocalFileSystem, compiled from the
-    committed source against the Hadoop API jar Spark ships, or None
-    when ``javac`` or that jar is missing or the build fails.
+def jvm_jar() -> str | None:
+    """Path of one jar holding every class in ``jvm/*.java``, compiled
+    from the committed sources against the jars Spark ships, or None
+    when ``javac`` or those jars are missing or the build fails.
 
-    The jar is cached in a directory named by a hash of the source and
-    the Hadoop jar's name, so an edit to either rebuilds it; it is
-    written to a temp file and renamed into place, so concurrent first
-    runs never see a partial jar."""
+    The jar is cached in a directory named by a hash of the sources and
+    the names of Spark's jars, so an edit to a source or a different
+    Spark rebuilds it; it is written to a temp file and renamed into
+    place, so concurrent first runs never see a partial jar."""
     javac = shutil.which("javac")
-    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
-    hadoop = sorted(glob.glob(os.path.join(spark_home, "jars", "hadoop-client-api-*.jar")))
-    if not javac or not hadoop:
+    spark_jars = os.path.join(
+        os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__), "jars"
+    )
+    jars = sorted(os.path.basename(j) for j in glob.glob(os.path.join(spark_jars, "*.jar")))
+    sources = sorted(glob.glob(os.path.join(JVM_DIR, "*.java")))
+    if not javac or not jars:
         return None
-    with open(NO_FORK_FS_SOURCE, "rb") as f:
-        key = hashlib.sha256(f.read() + os.path.basename(hadoop[-1]).encode()).hexdigest()
-    cache = os.path.join(_jar_cache_root(), f"ehb-nofork-{key[:16]}")
-    jar = os.path.join(cache, "NoForkLocalFileSystem.jar")
+    key = hashlib.sha256("\0".join(jars).encode())
+    for source in sources:
+        with open(source, "rb") as f:
+            key.update(b"\0" + os.path.basename(source).encode() + b"\0" + f.read())
+    cache = os.path.join(_jar_cache_root(), f"ehb-jvm-{key.hexdigest()[:16]}")
+    jar = os.path.join(cache, "ehb-jvm.jar")
     if os.path.exists(jar):
         return jar
     try:
@@ -128,8 +146,8 @@ def no_fork_fs_jar() -> str | None:
         scratch = tempfile.mkdtemp(dir=cache)
         try:
             subprocess.run(
-                [javac, "--release", "17", "-cp", hadoop[-1],
-                 "-d", scratch, NO_FORK_FS_SOURCE],
+                [javac, "--release", "17", "-cp", os.path.join(spark_jars, "*"),
+                 "-d", scratch, *sources],
                 check=True, capture_output=True, timeout=300,
             )
             staged = os.path.join(scratch, "staged.jar")
@@ -144,24 +162,34 @@ def no_fork_fs_jar() -> str | None:
     return jar
 
 
-def no_fork_fs_conf(master: str) -> tuple[dict[str, str], str]:
-    """Launch conf that installs NoForkLocalFileSystem as the session's
-    ``file:`` filesystem, or ({}, why not).
+def jvm_conf(master: str, extra: dict[str, str] | None = None) -> tuple[dict[str, str], str]:
+    """Launch conf that puts the ``jvm_jar`` on the driver classpath and
+    installs NoForkLocalFileSystem as the session's ``file:`` filesystem
+    and HadoopConfKryoRegistrator as its Kryo registrator, or
+    ({}, why not). A caller whose ``extra`` conf sets the filesystem or
+    the classpath owns the driver classpath and gets nothing; one that
+    sets a Kryo registrator keeps its own.
 
     The JVM's classpath is fixed when it starts and Hadoop's FileSystem
     cache already holds a ``file:`` instance once a context runs, so
     this applies only when this process is about to launch the JVM (no
     PYSPARK_GATEWAY_PORT from spark-submit, no active context). Only a
     ``local[...]`` master runs its executors in the driver JVM and so
-    on the driver's classpath."""
+    on the driver's classpath: a registrator class an executor cannot
+    load breaks every Kryo instance there, and so every broadcast."""
+    extra = extra or {}
+    if FS_FILE_IMPL_KEY in extra or CLASSPATH_KEY in extra:
+        return {}, ""
     if os.environ.get("PYSPARK_GATEWAY_PORT") or SparkContext._active_spark_context:
         return {}, "the JVM was launched before this session"
     if not _LOCAL_MASTER.fullmatch(master):
         return {}, f"master {master!r} runs executors outside the driver JVM"
-    jar = no_fork_fs_jar()
+    jar = jvm_jar()
     if not jar:
-        return {}, "javac or the Hadoop API jar is missing, or the build failed"
-    return {CLASSPATH_KEY: jar, FS_FILE_IMPL_KEY: NO_FORK_FS_CLASS}, ""
+        return {}, "javac or Spark's jars are missing, or the build failed"
+    conf = {CLASSPATH_KEY: jar, FS_FILE_IMPL_KEY: NO_FORK_FS_CLASS,
+            KRYO_REGISTRATOR_KEY: KRYO_REGISTRATOR_CLASS}
+    return {k: v for k, v in conf.items() if k not in extra}, ""
 
 
 def default_parallelism() -> int:
@@ -280,14 +308,13 @@ def get_spark(
     for key, value in RUNTIME_CONF.items():
         builder = builder.config(key, value)
     extra = extra_conf or {}
-    # A caller that sets either key owns the driver classpath.
-    owned = FS_FILE_IMPL_KEY in extra or CLASSPATH_KEY in extra
-    fs_conf, why_stock = ({}, "") if owned else no_fork_fs_conf(master)
-    for key, value in {**fs_conf, **extra}.items():
+    jvm, why_stock = jvm_conf(master, extra)
+    for key, value in {**jvm, **extra}.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     if why_stock and spark.sparkContext.getConf().get(FS_FILE_IMPL_KEY) is None:
         print(f"# ehb-spark: local files keep Hadoop's stock filesystem "
-              f"(a chmod fork per file): {why_stock}", file=sys.stderr)
+              f"(a chmod fork per file) and Hadoop confs Spark's Java "
+              f"serialization: {why_stock}", file=sys.stderr)
     spark.sparkContext.setLogLevel("WARN")
     return apply_runtime_conf(spark)

@@ -10,9 +10,11 @@ Usage:
 
 Under spark-submit the JVM starts before get_spark runs, so the job
 keeps Hadoop's stock local filesystem, which forks `chmod` for every
-checkpoint file it creates, unless a local-master launch also passes
-`--driver-class-path <jar>` (the path session.no_fork_fs_jar() returns)
-and `--conf spark.hadoop.fs.file.impl=stedi.spark.NoForkLocalFileSystem`.
+checkpoint file it creates, and Spark's Java serialization of every
+Hadoop conf it broadcasts, unless a local-master launch also passes
+`--driver-class-path <jar>` (the path session.jvm_jar() returns),
+`--conf spark.hadoop.fs.file.impl=stedi.spark.NoForkLocalFileSystem`
+and `--conf spark.kryo.registrator=stedi.spark.HadoopConfKryoRegistrator`.
 """
 
 from __future__ import annotations

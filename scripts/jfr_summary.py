@@ -2,7 +2,7 @@
 """Summarize a JDK Flight Recorder recording of the engine's JVM.
 
 Reads the recording through ``jfr print --json`` (the JDK's own
-reader) and prints three tables:
+reader) and prints four tables:
 
 - ``jdk.ProcessStart``: processes the JVM forked, counted by thread and
   by command, with path arguments folded to ``<path>`` and thread-pool
@@ -11,7 +11,11 @@ reader) and prints three tables:
 - ``jdk.GarbageCollection``: collections by collector and cause, with
   the sum and maximum of their pauses;
 - ``jdk.ExecutionSample``: the most frequent top frames of sampled
-  Java threads.
+  Java threads, and the same samples grouped by their nearest
+  ``org.apache.spark`` frame, which names the Spark code a JDK, Hadoop
+  or Kryo hot spot runs for (``Deflater.deflate`` under
+  ``TorrentBroadcast.blockifyObject``, say). Stacks are read
+  ``STACK_DEPTH`` frames deep.
 
 Record with ``-XX:StartFlightRecording`` in the driver's Java options,
 or with ``jcmd <pid> JFR.start`` / ``JFR.dump filename=<file>`` on a
@@ -32,6 +36,8 @@ import sys
 from collections import Counter, defaultdict
 
 EVENTS = "jdk.ProcessStart,jdk.GarbageCollection,jdk.ExecutionSample"
+STACK_DEPTH = 64
+SPARK_PACKAGE = "org.apache.spark."
 _UUID = re.compile(r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}")
 _ISO_DURATION = re.compile(r"PT(?:(\d+)H)?(?:(\d+)M)?(?:([\d.]+)S)?")
 
@@ -58,13 +64,25 @@ def command_shape(command: str) -> str:
     return " ".join("<path>" if "/" in w else w for w in command.split())
 
 
+def _frame_names(stack: dict | None) -> list[str]:
+    """``class.method`` of each frame of a JFR stack trace, top first."""
+    names = []
+    for frame in (stack or {}).get("frames") or []:
+        method = frame.get("method") or {}
+        cls = ((method.get("type") or {}).get("name") or "?").replace("/", ".")
+        names.append(f"{cls}.{method.get('name', '?')}")
+    return names
+
+
 def top_frame(stack: dict | None) -> str:
-    frames = (stack or {}).get("frames") or []
-    if not frames:
-        return "?"
-    method = frames[0].get("method") or {}
-    cls = ((method.get("type") or {}).get("name") or "?").replace("/", ".")
-    return f"{cls}.{method.get('name', '?')}"
+    return next(iter(_frame_names(stack)), "?")
+
+
+def spark_caller(stack: dict | None) -> str:
+    """The frame nearest the top of the stack whose class is Spark's,
+    or ``(no Spark frame)`` when the recorded depth holds none."""
+    return next((n for n in _frame_names(stack) if n.startswith(SPARK_PACKAGE)),
+                "(no Spark frame)")
 
 
 def summarize(events: list[dict]) -> dict:
@@ -83,6 +101,7 @@ def summarize(events: list[dict]) -> dict:
         "gc": {k: (len(p), sum(p), max(p)) for k, p in gcs.items()},
         "samples": len(samples),
         "top_frames": Counter(top_frame(v.get("stackTrace")) for v in samples),
+        "spark_callers": Counter(spark_caller(v.get("stackTrace")) for v in samples),
     }
 
 
@@ -101,7 +120,8 @@ def main() -> int:
     if not jfr:
         print("jfr_summary: the JDK's `jfr` tool is not on PATH", file=sys.stderr)
         return 2
-    out = subprocess.run([jfr, "print", "--json", "--stack-depth", "1", "--events", EVENTS,
+    out = subprocess.run([jfr, "print", "--json", "--stack-depth", str(STACK_DEPTH),
+                          "--events", EVENTS,
                           args.recording], check=True, capture_output=True, text=True).stdout
     s = summarize(json.loads(out)["recording"]["events"])
     print(f"process starts: {s['process_starts']}")
@@ -111,6 +131,7 @@ def main() -> int:
     for (name, cause), (n, total, longest) in sorted(s["gc"].items(), key=lambda kv: -kv[1][0]):
         print(f"  {n:8d}  {total:10.1f}  {longest:8.1f}  {name}: {cause}")
     _table(f"top frames of {s['samples']} execution samples", s["top_frames"], args.top)
+    _table("execution samples by nearest Spark frame", s["spark_callers"], args.top)
     return 0
 
 

@@ -29,13 +29,16 @@ from evaluate_human_balance_with_spark_streaming_spark.plans.stedi import (
 )
 from evaluate_human_balance_with_spark_streaming_spark.session import (
     CHECKPOINT_MANAGER_KEY,
+    CLASSPATH_KEY,
     FS_CHECKPOINT_MANAGER,
     FS_FILE_IMPL_KEY,
+    KRYO_REGISTRATOR_CLASS,
+    KRYO_REGISTRATOR_KEY,
     NO_FORK_FS_CLASS,
     apply_runtime_conf,
     checkpoint_conf,
-    no_fork_fs_conf,
-    no_fork_fs_jar,
+    jvm_conf,
+    jvm_jar,
 )
 from evaluate_human_balance_with_spark_streaming_spark.sources.files import (
     stream_json_dir,
@@ -241,12 +244,13 @@ def test_no_fork_fs_sticky_bit_takes_the_stock_path(spark, tmp_path):
 
 def test_no_javac_keeps_the_stock_filesystem(monkeypatch, tmp_path):
     """Without javac the build helper returns nothing, and a session
-    launched by get_spark leaves fs.file.impl unset and says why."""
+    launched by get_spark leaves fs.file.impl and the Kryo registrator
+    unset and says why."""
     real_which = shutil.which
     monkeypatch.setattr(
         shutil, "which", lambda cmd, *a, **k: None if cmd == "javac" else real_which(cmd, *a, **k)
     )
-    assert no_fork_fs_jar() is None
+    assert jvm_jar() is None
     # get_spark itself, in a process that launches its own JVM.
     script = tmp_path / "no_javac.py"
     script.write_text(
@@ -260,7 +264,8 @@ def test_no_javac_keeps_the_stock_filesystem(monkeypatch, tmp_path):
         "fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI('file:///'),"
         " spark._jsc.hadoopConfiguration())\n"
         "impl = spark.sparkContext.getConf().get('spark.hadoop.fs.file.impl')\n"
-        "print(impl, fs.getClass().getName())\n"
+        "registrator = spark.sparkContext.getConf().get('spark.kryo.registrator')\n"
+        "print(impl, registrator, fs.getClass().getName())\n"
         "spark.stop()\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYSPARK_GATEWAY_PORT"}
@@ -268,22 +273,29 @@ def test_no_javac_keeps_the_stock_filesystem(monkeypatch, tmp_path):
     run = subprocess.run([sys.executable, str(script)], capture_output=True, text=True,
                          env=env, timeout=300)
     assert run.returncode == 0, run.stderr[-2000:]
-    impl, fs_class = run.stdout.split()[-2:]
-    assert impl == "None" and fs_class != NO_FORK_FS_CLASS
+    impl, registrator, fs_class = run.stdout.split()[-3:]
+    assert impl == "None" and registrator == "None" and fs_class != NO_FORK_FS_CLASS
     assert "keep Hadoop's stock filesystem" in run.stderr
 
 
 def test_no_fork_fs_only_when_this_process_launches_a_local_jvm(spark, monkeypatch):
     """A running context (a session handed in, or a second get_spark)
-    and non-local masters keep the stock filesystem: the classpath is
-    fixed at launch, and cluster executors do not share the driver's."""
-    assert no_fork_fs_conf("local[2]")[0] == {}
+    and non-local masters keep the stock filesystem and Kryo
+    registrations: the classpath is fixed at launch, and cluster
+    executors do not share the driver's. A caller that owns the
+    classpath gets nothing; one that sets a registrator keeps it."""
+    assert jvm_conf("local[2]")[0] == {}
     monkeypatch.setattr(SparkContext, "_active_spark_context", None)
     for master in ("yarn", "spark://h:7077", "local-cluster[2,1,1024]"):
-        assert no_fork_fs_conf(master)[0] == {}
+        assert jvm_conf(master)[0] == {}
     monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
-    assert no_fork_fs_conf("local[2]")[0] == {}
+    assert jvm_conf("local[2]")[0] == {}
     monkeypatch.delenv("PYSPARK_GATEWAY_PORT")
-    conf, _ = no_fork_fs_conf("local[*]")
+    conf, _ = jvm_conf("local[*]")
     assert conf[FS_FILE_IMPL_KEY] == NO_FORK_FS_CLASS
-    assert os.path.isfile(conf["spark.driver.extraClassPath"])
+    assert conf[KRYO_REGISTRATOR_KEY] == KRYO_REGISTRATOR_CLASS
+    assert os.path.isfile(conf[CLASSPATH_KEY])
+    assert jvm_conf("local[*]", {CLASSPATH_KEY: "/opt/own.jar"}) == ({}, "")
+    assert jvm_conf("local[*]", {FS_FILE_IMPL_KEY: "own.FileSystem"}) == ({}, "")
+    own = jvm_conf("local[*]", {KRYO_REGISTRATOR_KEY: "own.Registrator"})[0]
+    assert KRYO_REGISTRATOR_KEY not in own and own[FS_FILE_IMPL_KEY] == NO_FORK_FS_CLASS

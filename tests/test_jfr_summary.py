@@ -1,0 +1,62 @@
+"""scripts/jfr_summary.py on a synthetic event list shaped like the
+output of ``jfr print --json``; no recording or JDK is needed."""
+
+from __future__ import annotations
+
+import importlib.util
+import os
+
+_spec = importlib.util.spec_from_file_location(
+    "jfr_summary",
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts",
+                 "jfr_summary.py"),
+)
+jfr_summary = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(jfr_summary)
+
+
+def _stack(*frames: str) -> dict:
+    """A JFR stack trace of ``package/Class.method`` frames, top first."""
+    return {"frames": [
+        {"method": {"type": {"name": f.rsplit(".", 1)[0]}, "name": f.rsplit(".", 1)[1]}}
+        for f in frames
+    ]}
+
+
+def _sample(*frames: str) -> dict:
+    return {"type": "jdk.ExecutionSample", "values": {"stackTrace": _stack(*frames)}}
+
+
+def test_summarize_groups_samples_by_nearest_spark_frame():
+    deflate = _sample("java/util/zip/Deflater.deflate",
+                      "org/apache/hadoop/conf/Configuration.write",
+                      "org/apache/spark/util/SerializableConfiguration.writeObject",
+                      "org/apache/spark/broadcast/TorrentBroadcast$.blockifyObject")
+    events = [
+        deflate, deflate,
+        _sample("java/util/HashMap.put",
+                "org/apache/spark/sql/execution/streaming/state/"
+                "HDFSBackedStateStoreProvider.getLoadedMapForStore"),
+        _sample("java/lang/Thread.run"),
+        {"type": "jdk.ExecutionSample", "values": {}},
+        {"type": "jdk.ProcessStart",
+         "values": {"command": "chmod 0644 /tmp/x", "eventThread": {"javaName": "pool-12-thread-3"}}},
+        {"type": "jdk.GarbageCollection",
+         "values": {"name": "G1New", "cause": "G1 Humongous Allocation", "sumOfPauses": "PT0.004S"}},
+        {"type": "jdk.GarbageCollection",
+         "values": {"name": "G1New", "cause": "G1 Humongous Allocation", "sumOfPauses": 2000000}},
+    ]
+    s = jfr_summary.summarize(events)
+    assert s["samples"] == 5
+    assert s["top_frames"] == {"java.util.zip.Deflater.deflate": 2, "java.util.HashMap.put": 1,
+                               "java.lang.Thread.run": 1, "?": 1}
+    assert s["spark_callers"] == {
+        "org.apache.spark.util.SerializableConfiguration.writeObject": 2,
+        "org.apache.spark.sql.execution.streaming.state."
+        "HDFSBackedStateStoreProvider.getLoadedMapForStore": 1,
+        "(no Spark frame)": 2,
+    }
+    assert s["process_starts"] == 1
+    assert s["starts_by_thread"] == {"pool-#-thread-#": 1}
+    assert s["starts_by_command"] == {"chmod 0644 <path>": 1}
+    assert s["gc"] == {("G1New", "G1 Humongous Allocation"): (2, 6.0, 4.0)}
