@@ -16,9 +16,12 @@ driver classpath (see ``jvm_jar``), compiled from the committed
 ``jvm/*.java`` with the JDK's ``javac`` on first use and cached under
 the gitignored ``jvm/build/``. It holds ``NoForkLocalFileSystem``, the
 ``file:`` filesystem, which sets file modes without forking ``chmod``,
-and ``HadoopConfKryoRegistrator``, which Kryo-serializes the Hadoop
+``HadoopConfKryoRegistrator``, which Kryo-serializes the Hadoop
 confs Spark broadcasts as plain strings instead of through Java
-serialization's per-property gzip.
+serialization's per-property gzip, and ``LeanHadoopConf``, a driver
+plugin that keeps the YARN and MapReduce default resources out of the
+context's Hadoop conf: about 400 properties instead of 1,117, in every
+copy Spark makes of it. Other launches keep Hadoop's full conf.
 """
 
 from __future__ import annotations
@@ -93,16 +96,23 @@ def checkpoint_conf(default_fs: str) -> dict[str, str]:
 # each state-store delta with its checksum file. NoForkLocalFileSystem
 # sets the same modes in-process.
 # Spark's Kryo registration sends SerializableConfiguration through Java
-# serialization to Configuration.write, which gzips each of the ~1,100
-# default properties' sources; the stream-stream join broadcasts a fresh
-# one with every copy of its plan; a micro-batch of the live risk join
-# makes 19 broadcasts in all.
-# HadoopConfKryoRegistrator writes the properties as plain strings.
+# serialization to Configuration.write, which gzips each property's
+# sources; the stream-stream join broadcasts a fresh one with every copy
+# of its plan; a micro-batch of the live risk join makes 19 broadcasts
+# in all. HadoopConfKryoRegistrator writes the properties as plain
+# strings.
+# A stock Hadoop conf holds 1,117 properties, 714 of them from
+# yarn-default.xml and mapred-default.xml, and every conf copy, broadcast
+# and write-task closure pays per property. LeanHadoopConf, started as a
+# driver plugin, keeps the context's conf to core-default.xml,
+# core-site.xml and the values Spark and this code set (about 400).
 JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
 NO_FORK_FS_CLASS = "stedi.spark.NoForkLocalFileSystem"
 KRYO_REGISTRATOR_CLASS = "stedi.spark.HadoopConfKryoRegistrator"
+LEAN_CONF_CLASS = "stedi.spark.LeanHadoopConf"
 FS_FILE_IMPL_KEY = "spark.hadoop.fs.file.impl"
 KRYO_REGISTRATOR_KEY = "spark.kryo.registrator"
+PLUGINS_KEY = "spark.plugins"
 CLASSPATH_KEY = "spark.driver.extraClassPath"
 _LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
 
@@ -164,11 +174,12 @@ def jvm_jar() -> str | None:
 
 def jvm_conf(master: str, extra: dict[str, str] | None = None) -> tuple[dict[str, str], str]:
     """Launch conf that puts the ``jvm_jar`` on the driver classpath and
-    installs NoForkLocalFileSystem as the session's ``file:`` filesystem
-    and HadoopConfKryoRegistrator as its Kryo registrator, or
-    ({}, why not). A caller whose ``extra`` conf sets the filesystem or
-    the classpath owns the driver classpath and gets nothing; one that
-    sets a Kryo registrator keeps its own.
+    installs NoForkLocalFileSystem as the session's ``file:`` filesystem,
+    HadoopConfKryoRegistrator as its Kryo registrator and the
+    LeanHadoopConf plugin, or ({}, why not). A caller whose ``extra``
+    conf sets the filesystem or the classpath owns the driver classpath
+    and gets nothing; one that sets a Kryo registrator or plugins keeps
+    its own (and, for plugins, Hadoop's full conf).
 
     The JVM's classpath is fixed when it starts and Hadoop's FileSystem
     cache already holds a ``file:`` instance once a context runs, so
@@ -176,7 +187,8 @@ def jvm_conf(master: str, extra: dict[str, str] | None = None) -> tuple[dict[str
     PYSPARK_GATEWAY_PORT from spark-submit, no active context). Only a
     ``local[...]`` master runs its executors in the driver JVM and so
     on the driver's classpath: a registrator class an executor cannot
-    load breaks every Kryo instance there, and so every broadcast."""
+    load breaks every Kryo instance there, and so every broadcast; and
+    a cluster needs the YARN and MapReduce keys the lean conf drops."""
     extra = extra or {}
     if FS_FILE_IMPL_KEY in extra or CLASSPATH_KEY in extra:
         return {}, ""
@@ -188,7 +200,7 @@ def jvm_conf(master: str, extra: dict[str, str] | None = None) -> tuple[dict[str
     if not jar:
         return {}, "javac or Spark's jars are missing, or the build failed"
     conf = {CLASSPATH_KEY: jar, FS_FILE_IMPL_KEY: NO_FORK_FS_CLASS,
-            KRYO_REGISTRATOR_KEY: KRYO_REGISTRATOR_CLASS}
+            KRYO_REGISTRATOR_KEY: KRYO_REGISTRATOR_CLASS, PLUGINS_KEY: LEAN_CONF_CLASS}
     return {k: v for k, v in conf.items() if k not in extra}, ""
 
 
@@ -314,7 +326,8 @@ def get_spark(
     spark = builder.getOrCreate()
     if why_stock and spark.sparkContext.getConf().get(FS_FILE_IMPL_KEY) is None:
         print(f"# ehb-spark: local files keep Hadoop's stock filesystem "
-              f"(a chmod fork per file) and Hadoop confs Spark's Java "
-              f"serialization: {why_stock}", file=sys.stderr)
+              f"(a chmod fork per file), Hadoop confs Spark's Java "
+              f"serialization and Hadoop's full default conf: {why_stock}",
+              file=sys.stderr)
     spark.sparkContext.setLogLevel("WARN")
     return apply_runtime_conf(spark)

@@ -17,11 +17,14 @@ Usage:
 
 Under spark-submit the JVM starts before get_spark runs, so the job
 keeps Hadoop's stock local filesystem, which forks `chmod` for every
-checkpoint file it creates, and Spark's Java serialization of every
-Hadoop conf it broadcasts, unless a local-master launch also passes
-`--driver-class-path <jar>` (the path session.jvm_jar() returns),
-`--conf spark.hadoop.fs.file.impl=stedi.spark.NoForkLocalFileSystem`
-and `--conf spark.kryo.registrator=stedi.spark.HadoopConfKryoRegistrator`.
+checkpoint file it creates, Spark's Java serialization of every Hadoop
+conf it broadcasts, and Hadoop's full default conf (1,117 properties,
+714 of them YARN and MapReduce defaults, carried by every conf copy),
+unless a local-master launch also passes `--driver-class-path <jar>`
+(the path session.jvm_jar() returns),
+`--conf spark.hadoop.fs.file.impl=stedi.spark.NoForkLocalFileSystem`,
+`--conf spark.kryo.registrator=stedi.spark.HadoopConfKryoRegistrator`
+and `--conf spark.plugins=stedi.spark.LeanHadoopConf`.
 """
 
 from __future__ import annotations

@@ -17,6 +17,11 @@ reader) and prints four tables:
   ``TorrentBroadcast.blockifyObject``, say). Stacks are read
   ``STACK_DEPTH`` frames deep.
 
+It also prints the Hadoop conf share: how many execution samples have
+a frame anywhere in their recorded stack in Hadoop's ``Configuration``,
+Spark's ``SerializableConfiguration`` or the engine's Kryo
+``ConfSerializer`` (building, copying, serializing and reading confs).
+
 Record with ``-XX:StartFlightRecording`` in the driver's Java options,
 or with ``jcmd <pid> JFR.start`` / ``JFR.dump filename=<file>`` on a
 running driver JVM.
@@ -38,6 +43,11 @@ from collections import Counter, defaultdict
 EVENTS = "jdk.ProcessStart,jdk.GarbageCollection,jdk.ExecutionSample"
 STACK_DEPTH = 64
 SPARK_PACKAGE = "org.apache.spark."
+CONF_CLASSES = (
+    "org.apache.hadoop.conf.Configuration",
+    "org.apache.spark.util.SerializableConfiguration",
+    "stedi.spark.HadoopConfKryoRegistrator$ConfSerializer",
+)
 _UUID = re.compile(r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}")
 _ISO_DURATION = re.compile(r"PT(?:(\d+)H)?(?:(\d+)M)?(?:([\d.]+)S)?")
 
@@ -85,6 +95,14 @@ def spark_caller(stack: dict | None) -> str:
                 "(no Spark frame)")
 
 
+def in_conf_code(stack: dict | None) -> bool:
+    """Whether any recorded frame is in one of ``CONF_CLASSES`` or a
+    nested class of one."""
+    return any(cls == c or cls.startswith(c + "$")
+               for cls in (n.rsplit(".", 1)[0] for n in _frame_names(stack))
+               for c in CONF_CLASSES)
+
+
 def summarize(events: list[dict]) -> dict:
     by_type: dict[str, list[dict]] = defaultdict(list)
     for e in events:
@@ -102,7 +120,13 @@ def summarize(events: list[dict]) -> dict:
         "samples": len(samples),
         "top_frames": Counter(top_frame(v.get("stackTrace")) for v in samples),
         "spark_callers": Counter(spark_caller(v.get("stackTrace")) for v in samples),
+        "conf_samples": sum(in_conf_code(v.get("stackTrace")) for v in samples),
     }
+
+
+def conf_share(s: dict) -> str:
+    share = 100.0 * s["conf_samples"] / s["samples"] if s["samples"] else 0.0
+    return f"Hadoop conf share: {s['conf_samples']} of {s['samples']} samples ({share:.1f}%)"
 
 
 def _table(title: str, counts: Counter, top: int) -> None:
@@ -132,6 +156,7 @@ def main() -> int:
         print(f"  {n:8d}  {total:10.1f}  {longest:8.1f}  {name}: {cause}")
     _table(f"top frames of {s['samples']} execution samples", s["top_frames"], args.top)
     _table("execution samples by nearest Spark frame", s["spark_callers"], args.top)
+    print(f"\n{conf_share(s)}")
     return 0
 
 

@@ -20,6 +20,13 @@ Same session discipline as the bench (conf-isolated replay_session,
 2-files-per-trigger wire by default), so the numbers are
 like-for-like with BENCH/SCALING rows.
 
+Total evicted rows vary from run to run of the same input (478,097 to
+478,142 over four runs of ``watermarked_tight`` at sf0.1 x10, on both
+providers) while the output stays at 749,950 rows, because which files
+land in which micro-batch varies between runs. The per-batch table is
+therefore one run's trace, not a reproducible measurement: compare
+totals across providers, not per-batch rows.
+
 Usage:
     python scripts/state_store_report.py [sf_dir] [K] [files_per_trigger] [wire_files]
     SPARK_GRAFT_STATE_STORE=rocksdb python scripts/state_store_report.py

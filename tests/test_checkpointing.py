@@ -34,7 +34,9 @@ from evaluate_human_balance_with_spark_streaming_spark.session import (
     FS_FILE_IMPL_KEY,
     KRYO_REGISTRATOR_CLASS,
     KRYO_REGISTRATOR_KEY,
+    LEAN_CONF_CLASS,
     NO_FORK_FS_CLASS,
+    PLUGINS_KEY,
     apply_runtime_conf,
     checkpoint_conf,
     jvm_conf,
@@ -244,8 +246,8 @@ def test_no_fork_fs_sticky_bit_takes_the_stock_path(spark, tmp_path):
 
 def test_no_javac_keeps_the_stock_filesystem(monkeypatch, tmp_path):
     """Without javac the build helper returns nothing, and a session
-    launched by get_spark leaves fs.file.impl and the Kryo registrator
-    unset and says why."""
+    launched by get_spark leaves fs.file.impl, the Kryo registrator and
+    the lean-conf plugin unset, keeps Hadoop's full conf and says why."""
     real_which = shutil.which
     monkeypatch.setattr(
         shutil, "which", lambda cmd, *a, **k: None if cmd == "javac" else real_which(cmd, *a, **k)
@@ -265,7 +267,9 @@ def test_no_javac_keeps_the_stock_filesystem(monkeypatch, tmp_path):
         " spark._jsc.hadoopConfiguration())\n"
         "impl = spark.sparkContext.getConf().get('spark.hadoop.fs.file.impl')\n"
         "registrator = spark.sparkContext.getConf().get('spark.kryo.registrator')\n"
-        "print(impl, registrator, fs.getClass().getName())\n"
+        "plugins = spark.sparkContext.getConf().get('spark.plugins')\n"
+        "props = spark._jsparkSession.sessionState().newHadoopConf().size()\n"
+        "print(impl, registrator, plugins, props, fs.getClass().getName())\n"
         "spark.stop()\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYSPARK_GATEWAY_PORT"}
@@ -273,17 +277,19 @@ def test_no_javac_keeps_the_stock_filesystem(monkeypatch, tmp_path):
     run = subprocess.run([sys.executable, str(script)], capture_output=True, text=True,
                          env=env, timeout=300)
     assert run.returncode == 0, run.stderr[-2000:]
-    impl, registrator, fs_class = run.stdout.split()[-3:]
+    impl, registrator, plugins, props, fs_class = run.stdout.split()[-5:]
     assert impl == "None" and registrator == "None" and fs_class != NO_FORK_FS_CLASS
+    assert plugins == "None" and int(props) > 1000
     assert "keep Hadoop's stock filesystem" in run.stderr
 
 
 def test_no_fork_fs_only_when_this_process_launches_a_local_jvm(spark, monkeypatch):
     """A running context (a session handed in, or a second get_spark)
     and non-local masters keep the stock filesystem and Kryo
-    registrations: the classpath is fixed at launch, and cluster
-    executors do not share the driver's. A caller that owns the
-    classpath gets nothing; one that sets a registrator keeps it."""
+    registrations and Hadoop's full conf: the classpath is fixed at
+    launch, cluster executors do not share the driver's, and a cluster
+    needs the YARN and MapReduce keys. A caller that owns the classpath
+    gets nothing; one that sets a registrator or plugins keeps its own."""
     assert jvm_conf("local[2]")[0] == {}
     monkeypatch.setattr(SparkContext, "_active_spark_context", None)
     for master in ("yarn", "spark://h:7077", "local-cluster[2,1,1024]"):
@@ -294,8 +300,12 @@ def test_no_fork_fs_only_when_this_process_launches_a_local_jvm(spark, monkeypat
     conf, _ = jvm_conf("local[*]")
     assert conf[FS_FILE_IMPL_KEY] == NO_FORK_FS_CLASS
     assert conf[KRYO_REGISTRATOR_KEY] == KRYO_REGISTRATOR_CLASS
+    assert conf[PLUGINS_KEY] == LEAN_CONF_CLASS
     assert os.path.isfile(conf[CLASSPATH_KEY])
     assert jvm_conf("local[*]", {CLASSPATH_KEY: "/opt/own.jar"}) == ({}, "")
     assert jvm_conf("local[*]", {FS_FILE_IMPL_KEY: "own.FileSystem"}) == ({}, "")
     own = jvm_conf("local[*]", {KRYO_REGISTRATOR_KEY: "own.Registrator"})[0]
     assert KRYO_REGISTRATOR_KEY not in own and own[FS_FILE_IMPL_KEY] == NO_FORK_FS_CLASS
+    assert own[PLUGINS_KEY] == LEAN_CONF_CLASS
+    own = jvm_conf("local[*]", {PLUGINS_KEY: "own.Plugin"})[0]
+    assert PLUGINS_KEY not in own and own[KRYO_REGISTRATOR_KEY] == KRYO_REGISTRATOR_CLASS

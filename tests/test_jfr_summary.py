@@ -56,7 +56,35 @@ def test_summarize_groups_samples_by_nearest_spark_frame():
         "HDFSBackedStateStoreProvider.getLoadedMapForStore": 1,
         "(no Spark frame)": 2,
     }
+    assert s["conf_samples"] == 2
     assert s["process_starts"] == 1
     assert s["starts_by_thread"] == {"pool-#-thread-#": 1}
     assert s["starts_by_command"] == {"chmod 0644 <path>": 1}
     assert s["gc"] == {("G1New", "G1 Humongous Allocation"): (2, 6.0, 4.0)}
+
+
+def test_conf_share_counts_samples_with_any_conf_frame():
+    """A sample counts once however many conf frames it has, wherever
+    they sit in the stack, nested classes included; a class whose name
+    only starts with a conf class's name does not count."""
+    events = [
+        _sample("org/apache/hadoop/conf/Configuration.getProps",
+                "org/apache/hadoop/conf/Configuration.<init>",
+                "org/apache/spark/sql/internal/SessionState.newHadoopConf"),
+        _sample("java/util/HashMap.putVal", "java/util/Properties.put",
+                "org/apache/hadoop/conf/Configuration$DeprecationContext.<init>"),
+        _sample("com/esotericsoftware/kryo/io/Output.writeString",
+                "stedi/spark/HadoopConfKryoRegistrator$ConfSerializer.write"),
+        _sample("java/io/ObjectInputStream.readObject",
+                "org/apache/spark/util/SerializableConfiguration.readObject",
+                "org/apache/spark/scheduler/ResultTask.runTask"),
+        _sample("org/apache/hadoop/conf/ConfigurationWithLogging.get"),
+        _sample("stedi/spark/HadoopConfKryoRegistrator.registerClasses"),
+        _sample("java/lang/Thread.run"),
+    ]
+    s = jfr_summary.summarize(events)
+    assert (s["conf_samples"], s["samples"]) == (4, 7)
+    assert jfr_summary.conf_share(s) == "Hadoop conf share: 4 of 7 samples (57.1%)"
+    assert jfr_summary.conf_share(jfr_summary.summarize([])) == (
+        "Hadoop conf share: 0 of 0 samples (0.0%)"
+    )
