@@ -17,10 +17,22 @@ reader) and prints four tables:
   ``TorrentBroadcast.blockifyObject``, say). Stacks are read
   ``STACK_DEPTH`` frames deep.
 
-It also prints the Hadoop conf share: how many execution samples have
-a frame anywhere in their recorded stack in Hadoop's ``Configuration``,
-Spark's ``SerializableConfiguration`` or the engine's Kryo
-``ConfSerializer`` (building, copying, serializing and reading confs).
+It also prints two shares of the execution samples, each counting the
+samples with a matching frame anywhere in their recorded stack:
+
+- the Hadoop conf share: a frame in Hadoop's ``Configuration``,
+  Spark's ``SerializableConfiguration`` or the engine's Kryo
+  ``ConfSerializer`` (building, copying, serializing and reading
+  confs);
+- the codegen share: Spark's ``CodeGenerator$.doCompile`` or any
+  Janino (``org.codehaus.janino``) frame, i.e. compiling generated
+  code, which a hit in Spark's compiled-class cache skips;
+
+and the JIT line: the count and summed duration of the
+``jdk.Compilation`` events, the HotSpot compilations of the recording.
+A recording keeps only compilations longer than its ``jdk.Compilation``
+threshold (1 s in the JDK's ``default`` settings, 100 ms in
+``profile``), so the line counts the long ones.
 
 Record with ``-XX:StartFlightRecording`` in the driver's Java options,
 or with ``jcmd <pid> JFR.start`` / ``JFR.dump filename=<file>`` on a
@@ -40,7 +52,7 @@ import subprocess
 import sys
 from collections import Counter, defaultdict
 
-EVENTS = "jdk.ProcessStart,jdk.GarbageCollection,jdk.ExecutionSample"
+EVENTS = "jdk.ProcessStart,jdk.GarbageCollection,jdk.ExecutionSample,jdk.Compilation"
 STACK_DEPTH = 64
 SPARK_PACKAGE = "org.apache.spark."
 CONF_CLASSES = (
@@ -48,6 +60,8 @@ CONF_CLASSES = (
     "org.apache.spark.util.SerializableConfiguration",
     "stedi.spark.HadoopConfKryoRegistrator$ConfSerializer",
 )
+CODEGEN_COMPILE = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$.doCompile"
+JANINO_PACKAGE = "org.codehaus.janino."
 _UUID = re.compile(r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}")
 _ISO_DURATION = re.compile(r"PT(?:(\d+)H)?(?:(\d+)M)?(?:([\d.]+)S)?")
 
@@ -103,6 +117,13 @@ def in_conf_code(stack: dict | None) -> bool:
                for c in CONF_CLASSES)
 
 
+def in_codegen(stack: dict | None) -> bool:
+    """Whether any recorded frame compiles generated code:
+    ``CODEGEN_COMPILE`` or a frame in ``JANINO_PACKAGE``."""
+    return any(n == CODEGEN_COMPILE or n.startswith(JANINO_PACKAGE)
+               for n in _frame_names(stack))
+
+
 def summarize(events: list[dict]) -> dict:
     by_type: dict[str, list[dict]] = defaultdict(list)
     for e in events:
@@ -121,12 +142,28 @@ def summarize(events: list[dict]) -> dict:
         "top_frames": Counter(top_frame(v.get("stackTrace")) for v in samples),
         "spark_callers": Counter(spark_caller(v.get("stackTrace")) for v in samples),
         "conf_samples": sum(in_conf_code(v.get("stackTrace")) for v in samples),
+        "codegen_samples": sum(in_codegen(v.get("stackTrace")) for v in samples),
+        "jit_compilations": len(by_type["jdk.Compilation"]),
+        "jit_ms": sum(duration_ms(v.get("duration")) for v in by_type["jdk.Compilation"]),
     }
 
 
+def _share(label: str, n: int, total: int) -> str:
+    share = 100.0 * n / total if total else 0.0
+    return f"{label} share: {n} of {total} samples ({share:.1f}%)"
+
+
 def conf_share(s: dict) -> str:
-    share = 100.0 * s["conf_samples"] / s["samples"] if s["samples"] else 0.0
-    return f"Hadoop conf share: {s['conf_samples']} of {s['samples']} samples ({share:.1f}%)"
+    return _share("Hadoop conf", s["conf_samples"], s["samples"])
+
+
+def codegen_share(s: dict) -> str:
+    return _share("codegen", s["codegen_samples"], s["samples"])
+
+
+def jit_line(s: dict) -> str:
+    return (f"JIT compilations (jdk.Compilation): {s['jit_compilations']}, "
+            f"{s['jit_ms']:.1f} ms summed")
 
 
 def _table(title: str, counts: Counter, top: int) -> None:
@@ -157,6 +194,8 @@ def main() -> int:
     _table(f"top frames of {s['samples']} execution samples", s["top_frames"], args.top)
     _table("execution samples by nearest Spark frame", s["spark_callers"], args.top)
     print(f"\n{conf_share(s)}")
+    print(codegen_share(s))
+    print(jit_line(s))
     return 0
 
 

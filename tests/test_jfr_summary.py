@@ -88,3 +88,40 @@ def test_conf_share_counts_samples_with_any_conf_frame():
     assert jfr_summary.conf_share(jfr_summary.summarize([])) == (
         "Hadoop conf share: 0 of 0 samples (0.0%)"
     )
+
+
+def test_codegen_share_counts_compiles_of_generated_code():
+    """A sample counts once when any frame is Spark's doCompile or in
+    Janino; the cache lookup around a compile and a class whose name
+    only starts with Janino's package name do not count."""
+    codegen = "org/apache/spark/sql/catalyst/expressions/codegen/CodeGenerator$"
+    events = [
+        _sample("org/codehaus/janino/UnitCompiler.compileGet2",
+                "org/codehaus/janino/UnitCompiler.compileGet",
+                f"{codegen}.doCompile",
+                f"{codegen}.compile",
+                "org/apache/spark/sql/execution/WholeStageCodegenExec.doExecute"),
+        _sample("org/codehaus/janino/Parser.read"),
+        _sample("java/util/HashMap.get", f"{codegen}.doCompile"),
+        _sample("java/util/concurrent/ConcurrentHashMap.get", f"{codegen}.compile"),
+        _sample("org/codehaus/janinox/Other.run"),
+        _sample("org/codehaus/commons/compiler/util/Numbers.parse"),
+    ]
+    s = jfr_summary.summarize(events)
+    assert (s["codegen_samples"], s["conf_samples"], s["samples"]) == (3, 0, 6)
+    assert jfr_summary.codegen_share(s) == "codegen share: 3 of 6 samples (50.0%)"
+
+
+def test_jit_line_counts_and_sums_compilations():
+    events = [
+        {"type": "jdk.Compilation", "values": {"duration": "PT0.25S", "isOsr": False}},
+        {"type": "jdk.Compilation", "values": {"duration": 1500000000}},
+        {"type": "jdk.Compilation", "values": {}},
+        _sample("java/lang/Thread.run"),
+    ]
+    s = jfr_summary.summarize(events)
+    assert (s["jit_compilations"], s["jit_ms"]) == (3, 1750.0)
+    assert jfr_summary.jit_line(s) == "JIT compilations (jdk.Compilation): 3, 1750.0 ms summed"
+    assert jfr_summary.jit_line(jfr_summary.summarize([])) == (
+        "JIT compilations (jdk.Compilation): 0, 0.0 ms summed"
+    )
