@@ -149,12 +149,12 @@ def _flagship_wires(spark, sf_dir, k):
 
 def prepare_stream_flagship(spark, sf_dir, k):
     """Untimed input preparation — the stand-in for data already
-    sitting in Kafka, exactly like bench.py's prematerialize_wires: the
-    1M-row JSON encode + 4-file parquet write is a long serial-ish
-    stage that (a) is not streaming-engine work and (b) cannot dodge a
-    host stall, so leaving it inside the timed window made the K ratio
-    measure parquet-write scaling instead of replay/state scaling
-    (measured 19.7-36.2 s total vs ~10 s replay-only)."""
+    sitting in Kafka: the 1M-row JSON encode + 4-file parquet write is
+    a long serial-ish stage that (a) is not streaming-engine work and
+    (b) cannot dodge a host stall, so leaving it inside the timed
+    window made the K ratio measure parquet-write scaling instead of
+    replay/state scaling (measured 19.7-36.2 s total vs ~10 s
+    replay-only)."""
     _flagship_wires(spark, sf_dir, k)
 
 
