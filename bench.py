@@ -20,8 +20,9 @@ from the baseline's is not checked (``regressions: null``).
 
 The full artifact, with each query's rep series and exec block, is
 written to BENCH_SELF.json before the session stops. This script never
-writes the bars; bench_record.py re-records them, from a run of this
-suite it can show was made on an idle box:
+writes the bars; bench_record.py re-records them from a run of this
+suite between calibration probes, and refuses one those probes show
+was made on a loaded box:
 
     SPARK_GRAFT_RECORD_BASELINE=1 python bench_record.py
 """

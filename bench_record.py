@@ -2,31 +2,25 @@
 """Guarded re-record of BENCH_BASELINE.json's per-query bars.
 
 ``python bench.py`` times the suite and checks it against fixed bars;
-it never writes them. This script is the one path that does, and it
-records only from a run it can show was made on an idle box:
+it never writes them. This script is the one path that does:
 
-1. wait (bounded, ``SPARK_GRAFT_WAIT_IDLE`` seconds, default 600) for
-   the 1-minute loadavg to drop under max(1.0, 10% of cpus);
-2. admit the suite only once a settled scan calibration probe reads
-   within PROBE_ADMIT_RATIO of the clean-box pin (CLEAN_PROBE.json,
-   else the pinned constants), within what is left of the same budget;
-3. time the suite with bench.py's own ``run_suite``, bracketed by a
-   scan and a stream calibration probe before and after;
-4. write the calibrated artifact to BENCH_SELF.json and, with
+1. time the suite with bench.py's own ``run_suite``, bracketed by a
+   scan and a stream calibration probe before and after, and the
+   1-minute loadavg before and after;
+2. write the calibrated artifact to BENCH_SELF.json and, with
    ``SPARK_GRAFT_RECORD_BASELINE=1``, to BENCH_BASELINE.json, refusing
-   a recording whose probes exceed the clean pins by more than 5%,
-   whose scale factor differs from the standing bars', or whose median
-   per-query ratio to the standing bars exceeds 1.10.
+   a recording whose probes exceed the clean pins (CLEAN_PROBE.json,
+   else the pinned constants) by more than 5%, whose scale factor
+   differs from the standing bars', or whose median per-query ratio to
+   the standing bars exceeds 1.10.
 
 Without ``SPARK_GRAFT_RECORD_BASELINE`` the run is a dry run: the
-calibrated artifact shows whether the window qualified. Knobs:
-``SPARK_GRAFT_RECORD_BASELINE_QUERIES=a,b`` patches only the named
-bars, and only downward; ``SPARK_GRAFT_BASELINE_FORCE=1`` records on
-new hardware or a new scale, still only on an idle loadavg;
-``SPARK_GRAFT_PROBE_ADMIT_RATIO`` sets the admission bar.
-``SPARK_GRAFT_DERIVE_CLEAN_PROBE=1`` instead re-derives the clean-box
-pins into CLEAN_PROBE.json (``SPARK_GRAFT_DERIVE_FORCE=1`` for a move
-to slower hardware).
+calibrated artifact shows whether the window qualified.
+``SPARK_GRAFT_BASELINE_FORCE=1`` records on new hardware or a new
+scale, still only on an idle loadavg. ``SPARK_GRAFT_DERIVE_CLEAN_PROBE=1``
+instead re-derives the clean-box pins into CLEAN_PROBE.json
+(``SPARK_GRAFT_DERIVE_FORCE=1`` for a move to slower hardware).
+``SPARK_GRAFT_SF_DIR`` picks the data, as for bench.py.
 """
 
 from __future__ import annotations
@@ -101,8 +95,8 @@ CLEAN_STREAM_PROBE_S = 1.337
 # 37+ recordings never ≤1.10x of the 1.337 s pin, then a controlled
 # experiment reproduced the elevation on scan-clean windows and cleared checkpoint-I/O substrate and
 # state-store provider as causes — SCALING.md r14), so the r06-pinned
-# window no longer exists on the current host and judging probe_clean
-# against it permanently reads false. The shipped file was derived
+# window no longer exists on the current host and judging recordings
+# against it permanently refuses them. The shipped file was derived
 # under this path's own idle + settled-series + vs-standing gates;
 # the constants below stay as the historical record and the fallback.
 CLEAN_PROBE_FILE = "CLEAN_PROBE.json"
@@ -516,319 +510,6 @@ def derive_clean_probe(here: str | None = None) -> int:
     return 0
 
 
-# Default pre-suite idle-wait budget when SPARK_GRAFT_WAIT_IDLE is
-# unset. 600 s spans one measured wave
-# cadence on this box (external load arrives roughly every 10-20 min;
-# the r08 overnight campaign measured a ~10-min cadence), so polling
-# across it very likely catches a gap; on an idle box wait_for_idle
-# returns without sleeping, so the default costs nothing there. Set
-# SPARK_GRAFT_WAIT_IDLE=0 to opt out entirely.
-#
-# Small-box caveat (ADVICE r08): wait_for_idle's release condition
-# also requires la5 <= 2*bar, and on <=10 cpus the bar clamps to 1.0,
-# so a box with chronic background la5 > 2.0 burns this whole budget
-# before proceeding even when la1 is idle. That is accepted, not
-# fixed by scaling the guard off cpus: the suggested
-# max(2*bar, 0.25*cpus) would loosen THIS 32-cpu box's guard from 6.4
-# to 8.0 and re-admit the measured mid-wave release (la1 3.03 with
-# la5 still 6.55 — suite ran 1.07x with probes 1.23x/1.19x). A
-# chronically loaded small box should opt out or tune the budget via
-# SPARK_GRAFT_WAIT_IDLE; the wait proceeds either way after the
-# budget, so nothing hangs.
-DEFAULT_IDLE_WAIT_S = 600.0
-
-
-def idle_wait_budget_s(env: dict | None = None) -> float:
-    """Parse SPARK_GRAFT_WAIT_IDLE (seconds to wait, at most, for the
-    1-minute loadavg to drop under the idleness bar before the timed
-    suite). DEFAULT_IDLE_WAIT_S when unset or unparseable — so a
-    knob-free invocation inherits the idleness protocol — and 0 only
-    on an explicit non-positive value (the opt-out). Pure, for the
-    gate tests."""
-    env = os.environ if env is None else env
-    if "SPARK_GRAFT_WAIT_IDLE" not in env:
-        return DEFAULT_IDLE_WAIT_S
-    raw = env["SPARK_GRAFT_WAIT_IDLE"]
-    # `SPARK_GRAFT_WAIT_IDLE= python bench_record.py` (or an empty
-    # interpolated shell variable) is the common idiom for disabling a
-    # knob: a deliberate blank is an opt-out, not a typo.
-    if isinstance(raw, str) and not raw.strip():
-        return 0.0
-    try:
-        budget = float(raw)
-    except (TypeError, ValueError):
-        # Set but unusable: fall back to the (bounded) default rather
-        # than silently disabling the protection a typo meant to tune.
-        return DEFAULT_IDLE_WAIT_S
-    # Explicit <= 0 is the opt-out (including -inf). Then float()
-    # accepts 'inf'/'1e400': an infinite budget would
-    # make wait_for_idle's `while waited < budget_s` loop forever on a
-    # loaded box — the exact caller-timeout hang the wait exists to
-    # avoid. NaN compares false on both tests and would skip the cap.
-    # Both fall back to the bounded default. Cap at one hour: longer
-    # than any measured load wave on this box, still bounded.
-    if budget <= 0:
-        return 0.0
-    if not math.isfinite(budget):
-        return DEFAULT_IDLE_WAIT_S
-    return min(budget, 3600.0)
-
-
-def wait_for_idle(
-    budget_s: float,
-    poll_s: float = 5.0,
-    cpus: int | None = None,
-    loadavg_fn=None,
-    sleep_fn=None,
-) -> dict:
-    """Optionally wait out a load wave before the timed suite (VERDICT
-    r07 item 2): two rounds running, the per-round bench artifact landed
-    on loaded windows (loadavg 3.57, then 6.55 — this box's external
-    load arrives in ~20-minute waves) while hand-invoked idle runs
-    told the true story; the idleness machinery only protected runs
-    whose INVOKER checked /proc/loadavg first. By default (budget
-    ``DEFAULT_IDLE_WAIT_S``, tunable via
-    ``SPARK_GRAFT_WAIT_IDLE=<seconds>``, ``=0`` to opt out), main()
-    polls the 1-minute loadavg until it sits under the FORCE idleness
-    bar
-    (max(1.0, 10% of cpus) — the same threshold force_idleness_error
-    holds baseline re-records to) or the budget expires, then proceeds
-    EITHER WAY: the wait improves the window when it can and documents
-    the refusal when it cannot, so a bounded caller timeout is never
-    risked. Returns the evidence dict recorded under
-    ``load.idle_wait`` in the artifact:
-
-      {"requested_s", "waited_s", "polls", "bar",
-       "loadavg_first", "loadavg_last", "satisfied"}
-
-    Injectable clock/loadavg for Spark-free gate tests."""
-    loadavg_fn = loadavg_fn or _loadavg
-    sleep_fn = sleep_fn or time.sleep
-    cpus = cpus or os.cpu_count() or 8
-    bar = max(1.0, FORCE_MAX_LOADAVG_FRAC * cpus)
-
-    def _idle(la: list[float]) -> bool:
-        # The 1-minute average alone released a window mid-wave on
-        # this box (measured: released at la1 3.03 while la5 was
-        # still 6.55 — the wave resumed and the suite ran 1.07x with
-        # probes 1.23x/1.19x). Also require the 5-minute average
-        # under 2x the bar: after a real wave la5 decays through
-        # 2*bar within a few minutes, so the extra condition delays
-        # release slightly but refuses the eye of a passing storm.
-        return bool(la) and la[0] <= bar and (len(la) < 2 or la[1] <= 2 * bar)
-
-    la = loadavg_fn()
-    first = la[0] if la else None
-    out = {
-        "requested_s": budget_s,
-        "waited_s": 0.0,
-        "polls": 1,
-        "bar": bar,
-        "loadavg_first": first,
-        "loadavg_last": first,
-        "satisfied": _idle(la),
-    }
-    if out["satisfied"] or not la or budget_s <= 0:
-        return out
-    print(
-        f"# WAIT_IDLE: loadavg {la[0]:.2f} > bar {bar:.1f}; polling up "
-        f"to {budget_s:.0f}s for the wave to pass",
-        file=sys.stderr,
-    )
-    waited = 0.0
-    while waited < budget_s:
-        step = min(poll_s, budget_s - waited)
-        sleep_fn(step)
-        waited += step
-        la = loadavg_fn()
-        out["polls"] += 1
-        out["loadavg_last"] = la[0] if la else None
-        if _idle(la):
-            out["satisfied"] = True
-            break
-    out["waited_s"] = round(waited, 1)
-    if not out["satisfied"]:
-        print(
-            f"# WAIT_IDLE REFUSED: loadavg still {out['loadavg_last']} "
-            f"after {waited:.0f}s — proceeding anyway; the artifact's "
-            "probes will document the load",
-            file=sys.stderr,
-        )
-    return out
-
-
-# Probe-gated suite admission (VERDICT r12 item 1). The loadavg-based
-# wait_for_idle cannot see host-level contention: the r12 bench
-# artifact shows the idle wait "satisfied" at loadavg 3.10 immediately
-# before a 23 s scan-probe spike, and the whole 16-run r12 campaign
-# never found a probe-clean window while every loadavg read idle —
-# the guest's /proc/loadavg is blind to the hypervisor-level load the
-# probes measure directly. So after loadavg passes AND the warmups +
-# first settled scan probe have run, the suite is released only once
-# that probe's settled min sits within PROBE_ADMIT_RATIO of the
-# clean-box pin (0.454 s) — retrying the probe on a poll cadence
-# within the same bounded budget wait_for_idle draws from, and
-# proceeding EITHER WAY when the budget expires (never-block: a
-# bounded caller timeout is never risked; the refusal is logged like
-# WAIT_IDLE REFUSED and recorded in the artifact). The bar is
-# deliberately LOOSER than BASELINE_MAX_PROBE_RATIO (1.05): admission
-# improves the measurement window when it can; probe_clean stays the
-# strict box-absolute verdict on whatever window actually ran.
-PROBE_ADMIT_RATIO = 1.15
-
-
-def _admit_ratio_from_env(env=None) -> float:
-    """Admission bar override: SPARK_GRAFT_PROBE_ADMIT_RATIO=<float>.
-
-    The 1.15 default is right for ordinary suite runs (admission
-    improves the window when it can; probe_clean stays the strict
-    verdict). A baseline-TIGHTENING campaign (VERDICT r15 item 1) has
-    the opposite economics: a warm-but-admitted window burns a whole
-    ~6-min suite run to produce a stamp-only patch, while the run's
-    only purpose was to observe a near-floor window — there a
-    stricter bar (e.g. 1.02) plus a bigger SPARK_GRAFT_WAIT_IDLE
-    budget holds out for the clean stretch instead. Opt-in per
-    process; never-block is preserved either way (budget exhausted →
-    logged refusal, suite proceeds, the 1.05x record gate still
-    adjudicates). Unparseable or non-positive values fall back to the
-    default loudly rather than silently gating on garbage."""
-    raw = (env if env is not None else os.environ).get(
-        "SPARK_GRAFT_PROBE_ADMIT_RATIO"
-    )
-    if raw is None or not str(raw).strip():
-        return PROBE_ADMIT_RATIO
-    try:
-        v = float(raw)
-    except ValueError:
-        v = -1.0
-    if v <= 0:
-        print(
-            f"# PROBE_ADMIT_RATIO ignored (unparseable/non-positive: "
-            f"{raw!r}); using default {PROBE_ADMIT_RATIO}",
-            file=sys.stderr,
-        )
-        return PROBE_ADMIT_RATIO
-    return v
-# Poll cadence between probe re-runs: the box's load arrives in
-# ~10-20-minute waves (SCALING.md r07/r08), and each probe re-run
-# itself costs seconds of evidence-gathering wall — 20 s spacing
-# samples a wave edge a few times without burning the budget on
-# back-to-back probes.
-PROBE_ADMIT_POLL_S = 20.0
-
-
-def probe_admission(
-    probe_fn,
-    pin_s: float | None,
-    budget_s: float,
-    ratio: float = PROBE_ADMIT_RATIO,
-    poll_s: float = PROBE_ADMIT_POLL_S,
-    sleep_fn=None,
-    clock=None,
-    reprobe_fn=None,
-) -> tuple[dict, float, list[float]]:
-    """Release the timed suite only on a scan-probe-clean window, or
-    after ``budget_s`` of bounded retrying — never block. ``probe_fn``
-    is a zero-arg callable returning ``(settled_min_s, series)`` (a
-    closure over the live calibration_probe); it runs at least once.
-    ``reprobe_fn`` (default: ``probe_fn``) runs the RETRY attempts —
-    main() passes a shorter-rep probe there, because the first probe
-    doubles as the 12-rep JIT-settle barrier while a retry only needs
-    to sense the window on an already-settled plan (measured on the
-    r13 smoke: a full settle probe on a loaded window cost 190 s of
-    the budget in one attempt; a 4-rep window sample costs a fraction
-    of that and the budget buys several looks at the wave instead of
-    one). Returns ``(evidence, probe_min_s, series)`` where
-    ``probe_min_s`` / ``series`` are the FINAL attempt's — the window
-    the suite actually enters. Earlier attempts' mins stay visible in
-    ``evidence["attempt_mins"]`` (load-arrival evidence, same role as
-    the pre-probe spike series the r12 artifact carried).
-
-    Evidence dict (recorded under ``load.probe_admission``):
-    ``{"requested_s", "waited_s", "attempts", "ratio", "pin_s",
-    "bar_s", "attempt_mins", "satisfied"}``. ``satisfied`` is None
-    when no valid pin exists (nothing to judge against — a single
-    probe runs and the suite proceeds; no evidence is recorded as
-    clean). ``waited_s`` is the wall from admission start, INCLUDING
-    the mandatory first probe — so on a loaded box it can exceed a
-    small ``requested_s`` (the budget bounds the RETRYING, which the
-    loop condition measures on the same clock): a loaded box makes
-    each probe itself slow, and that elapsed time must count against
-    the bound or the never-block guarantee quietly weakens.
-    Injectable ``sleep_fn``/``clock`` for Spark-free gate tests."""
-    sleep_fn = sleep_fn or time.sleep
-    clock = clock or time.monotonic
-    reprobe_fn = reprobe_fn or probe_fn
-    t0 = clock()
-    best, series = probe_fn()
-    evidence = {
-        "requested_s": budget_s,
-        "waited_s": 0.0,
-        "attempts": 1,
-        "ratio": ratio,
-        "pin_s": pin_s if _pos_num(pin_s) else None,
-        "bar_s": None,
-        "attempt_mins": [best],
-        "satisfied": None,
-    }
-    if not _pos_num(pin_s):
-        # No clean pin to judge against (corrupt CLEAN_PROBE.json
-        # shape falls back to constants upstream, so this is a
-        # hand-fed/test case): proceed on the single probe, satisfied
-        # stays None — absence of a bar is not evidence of a clean
-        # window. waited_s still records the mandatory first probe's
-        # wall so the evidence dict is consistent on every path
-        # (ADVICE r13).
-        evidence["waited_s"] = round(clock() - t0, 1)
-        return evidence, best, series
-    bar = ratio * pin_s
-    evidence["bar_s"] = round(bar, 3)
-    evidence["satisfied"] = best <= bar
-    if evidence["satisfied"] or budget_s <= 0:
-        evidence["waited_s"] = round(clock() - t0, 1)
-        if not evidence["satisfied"]:
-            # Dirty first probe with no retry budget left (the idle
-            # wait consumed it all): still a refusal, and stderr must
-            # say so or the artifact's satisfied=False has no log twin
-            # (ADVICE r13).
-            print(
-                f"# PROBE_ADMISSION REFUSED: scan probe {best}s "
-                f"({best / pin_s:.2f}x of pin) and no retry budget "
-                "remains — proceeding anyway; probe_clean and the rep "
-                "series document the window",
-                file=sys.stderr,
-            )
-        return evidence, best, series
-    print(
-        f"# PROBE_ADMISSION: scan probe {best}s > bar {bar:.3f}s "
-        f"({ratio}x of {pin_s}s pin); re-probing up to {budget_s:.0f}s "
-        "for a clean window",
-        file=sys.stderr,
-    )
-    while (clock() - t0) < budget_s:
-        sleep_fn(min(poll_s, max(0.0, budget_s - (clock() - t0))))
-        if (clock() - t0) >= budget_s:
-            break
-        best, series = reprobe_fn()
-        evidence["attempts"] += 1
-        evidence["attempt_mins"].append(best)
-        if best <= bar:
-            evidence["satisfied"] = True
-            break
-    evidence["waited_s"] = round(clock() - t0, 1)
-    if not evidence["satisfied"]:
-        print(
-            f"# PROBE_ADMISSION REFUSED: scan probe still {best}s "
-            f"({best / pin_s:.2f}x of pin) after "
-            f"{evidence['waited_s']:.0f}s / {evidence['attempts']} "
-            "attempts — proceeding anyway; probe_clean and the rep "
-            "series document the window",
-            file=sys.stderr,
-        )
-    return evidence, best, series
-
-
-
 def baseline_recording_error(
     probe_s: float | None,
     pinned: float = CLEAN_PROBE_S,
@@ -957,118 +638,6 @@ def _record_vs_standing_error(
     return None
 
 
-def _patch_baseline_queries(
-    artifact: dict, names_csv: str, path: str, ref: dict
-) -> int:
-    """Targeted reps-parity patch (VERDICT r13 item 2 / r12 item 5):
-    update ONLY the named queries in the standing BENCH_BASELINE.json,
-    and only DOWNWARD — min(observed, standing) — so a patch can
-    tighten a bar or stamp the standing value as already at the
-    multi-rep floor, but can never loosen the gate (the full-record
-    ratchet above is exactly the failure a window-of-the-day patch
-    would reintroduce). The probe + sf gates in maybe_record_baseline
-    have already passed when this runs. Each patch appends a
-    provenance record under ``patches`` (names, old/new values, the
-    recording window's probes and loadavg, the clean reference
-    enforced) so every entry in the file remains traceable to the
-    recording that produced it; ``reps_overrides`` for the named
-    queries are merged in from the patching artifact, which is what
-    stamps the reps parity."""
-    try:
-        standing = _read_bench_json(path)
-    except Exception as e:
-        print(
-            f"# BASELINE PATCH REFUSED: no readable standing baseline at "
-            f"{path} ({e}) — a patch needs a baseline to patch; run a "
-            "full record first",
-            file=sys.stderr,
-        )
-        return 1
-    names = [n.strip() for n in names_csv.split(",") if n.strip()]
-    art_q = artifact.get("queries") or {}
-    std_q = standing.get("queries") or {}
-    missing = [n for n in names if not _pos_num(art_q.get(n))]
-    absent = [n for n in names if n not in std_q]
-    if not names or missing or absent:
-        print(
-            f"# BASELINE PATCH REFUSED: unpatchable queries — not in this "
-            f"recording: {missing}; not in the standing baseline: {absent}",
-            file=sys.stderr,
-        )
-        return 1
-    patched: dict[str, dict] = {}
-    stamped: dict[str, dict] = {}
-    for n in names:
-        new, old = art_q[n], std_q[n]
-        if new < old:
-            std_q[n] = new
-            patched[n] = {"from": old, "to": new}
-        else:
-            stamped[n] = {"standing": old, "observed": new}
-    overrides = dict(standing.get("reps_overrides") or {})
-    for n in names:
-        reps = (artifact.get("reps_overrides") or {}).get(n)
-        if reps:
-            overrides[n] = reps
-    standing["reps_overrides"] = overrides
-    standing["value"] = round(sum(std_q.values()), 3)
-    # ADVICE r14/r15: a tightening patch must not leave derived
-    # sibling fields describing the PRE-patch recording. wall_s (one
-    # recording's wall clock) and the whole comparable block are both
-    # that recording's view — sum_now was computed over the GATED
-    # subset (queries present in the then-prior baseline), so setting
-    # it to the full-suite value here (the r14 fix) silently
-    # conflated the comparable subset with the suite sum whenever the
-    # standing baseline carried an entry the prior baseline lacked.
-    # Neither field can be recomputed faithfully once per-query
-    # values mix recording vintages, so both are dropped and the
-    # drops noted in the provenance record. The timing string stays
-    # accurate as written ("floored per reps_overrides" — the
-    # overrides were just merged above). Stamp-only patches (patched
-    # empty) change no value, so nothing is stale and nothing moves.
-    dropped_stale: list[str] = []
-    if patched:
-        for stale in ("comparable", "wall_s"):
-            if stale in standing:
-                del standing[stale]
-                dropped_stale.append(stale)
-    cal = artifact.get("calibration") or {}
-    standing.setdefault("patches", []).append(
-        {
-            "queries": names,
-            "patched": patched,
-            "stamped": stamped,
-            "dropped_stale": dropped_stale,
-            "sf": artifact.get("sf"),
-            "reps_overrides": {
-                n: (artifact.get("reps_overrides") or {}).get(n) for n in names
-            },
-            "calibration": {
-                k: cal.get(k)
-                for k in (
-                    "probe_s",
-                    "probe_pre_s",
-                    "probe_post_s",
-                    "stream_probe_s",
-                    "stream_probe_pre_s",
-                    "stream_probe_post_s",
-                )
-            },
-            "loadavg_pre": (artifact.get("load") or {}).get("loadavg_pre"),
-            "clean_probe": dict(ref),
-        }
-    )
-    with open(path, "w") as f:
-        json.dump(standing, f)
-        f.write("\n")
-    print(
-        f"# BASELINE PATCHED at {path}: tightened {sorted(patched)} "
-        f"(stamped-at-floor {sorted(stamped)})",
-        file=sys.stderr,
-    )
-    return 0
-
-
 def maybe_record_baseline(artifact: dict, here: str | None = None) -> int:
     """When SPARK_GRAFT_RECORD_BASELINE=1, write ``artifact`` to
     BENCH_BASELINE.json — REFUSING a recording whose own probe fails
@@ -1128,12 +697,6 @@ def maybe_record_baseline(artifact: dict, here: str | None = None) -> int:
             print(f"# BASELINE REFUSED even under FORCE: {ferr}", file=sys.stderr)
             return 1
         print(f"# BASELINE FORCED despite: {err}", file=sys.stderr)
-    names_csv = (os.environ.get("SPARK_GRAFT_RECORD_BASELINE_QUERIES") or "").strip()
-    if names_csv:
-        # Targeted reps-parity patch: same sf + probe gates as a full
-        # record (they just passed above), but only the named entries
-        # change, and only downward.
-        return _patch_baseline_queries(artifact, names_csv, path, ref)
     try:
         standing_q = (_read_bench_json(path)).get("queries") or {}
     except Exception:
@@ -1162,138 +725,17 @@ def maybe_record_baseline(artifact: dict, here: str | None = None) -> int:
     return 0
 
 
-def probe_clean_flag(
-    probe_s: float | None,
-    stream_probe_s: float | None,
-    ref: dict,
-    max_ratio: float = BASELINE_MAX_PROBE_RATIO,
-) -> bool:
-    """True iff BOTH calibration probes sit within ``max_ratio`` of
-    their clean-box reference pins — the exact condition the r08
-    closing campaign used to partition its tally into probe-clean
-    (0.950/0.951/0.992x) vs probe-elevated (1.00-1.15x) runs. Emitted
-    as a top-level artifact field (VERDICT r08 item 6) so a reader
-    gets the partition from the artifact alone instead of recomputing
-    it from calibration. A run with a missing probe is NOT clean: no
-    evidence is not evidence of idleness. The predicate IS the
-    baseline-record idleness rule (one implementation: two
-    copies of the two-probe-vs-pins rule could drift apart, making
-    the artifact's flag disagree with what the record gate actually
-    enforces); the two callers differ only in INPUTS (ADVICE r09):
-    calibrated_artifact feeds this flag the scan probe's worst pre/post
-    window (_worst_probe) and the stream probe's settled post window
-    (_settled_stream_probe), while the record gate judges the
-    recorded min(pre, post) — so flag-true implies gate-pass, never
-    the reverse. Pure, for Spark-free gate tests."""
-    return (
-        baseline_recording_error(
-            probe_s,
-            pinned=ref["probe_s"],
-            max_ratio=max_ratio,
-            stream_probe_s=stream_probe_s,
-            stream_pinned=ref["stream_probe_s"],
-        )
-        is None
-    )
-
-
 def _pos_num(v) -> bool:
     """True iff ``v`` is a positive finite number and not a JSON
     boolean — the one probe-value validity predicate, shared by the
-    window pickers below so it cannot drift between them (it
-    once existed twice three lines apart, and the fallback scalar
-    skipped it entirely — a junk recorded probe_s of True or a
-    negative value sailed into probe_clean_flag where a negative
-    ratio compares 'clean')."""
+    record and derivation gates and the baseline readers so it cannot
+    drift between them (a negative probe ratio compares 'clean')."""
     return (
         isinstance(v, (int, float))
         and not isinstance(v, bool)
         and math.isfinite(v)
         and v > 0
     )
-
-
-def _worst_probe(calibration: dict, key: str) -> float | None:
-    """The WORST (max) of the pre- and post-suite probe windows for
-    ``key``, falling back to the recorded ``{key}_s`` when the
-    per-window values are absent (old artifacts, unit tests that pass
-    a single probe). ADVICE r09: the artifact's ``{key}_s`` is
-    min(pre, post) — judging probe_clean on it marks a run clean when
-    ONE window was quiet even if the other was heavily loaded
-    (SCALING.md r09 run 5 passed 'clean' yet ran 1.049x). Feeds the
-    probe_clean flag's SCAN input only: the scan probe's two windows
-    are symmetric instruments (pre/post both span 0.32-0.42 across
-    every recorded artifact), so the worst of them is honest box-load
-    evidence. The STREAM probe's windows are NOT symmetric — see
-    _settled_stream_probe. The baseline-RECORD gate keeps judging
-    min() (its established protocol: the box was demonstrably clean
-    at probe time, and the recording also needs loadavg evidence), so
-    flag-true implies gate-pass but not vice versa."""
-    windows = [
-        v
-        for v in (calibration.get(f"{key}_pre_s"), calibration.get(f"{key}_post_s"))
-        if v is not None
-    ]
-    valid = [v for v in windows if _pos_num(v)]
-    fallback = calibration.get(f"{key}_s")
-    if len(valid) < len(windows):
-        # ADVICE r10: a PRESENT-but-junk window (JSON true, a negative)
-        # is corrupt evidence, not absence — returning the lone quiet
-        # window would let it mark the run clean, and if the recorded
-        # scalar exceeded that survivor the documented 'flag-true
-        # implies gate-pass' invariant would break. Fold the recorded
-        # scalar in and judge the max of scalar + surviving windows;
-        # without a valid scalar to anchor that invariant (the record
-        # gate judges the scalar and would itself refuse a junk one)
-        # the probe is missing (no evidence is not evidence of
-        # idleness).
-        if not _pos_num(fallback):
-            return None
-        return max(valid + [fallback])
-    if valid:
-        # ADVICE r11: fold a valid recorded scalar in even when a
-        # window is simply ABSENT (not junk). probe_s is min(pre,post)
-        # by construction, so on any self-consistent artifact this is
-        # a no-op — but a hand-fed artifact whose scalar exceeds the
-        # lone surviving window could otherwise read probe_clean=true
-        # while the baseline-record gate (which judges the scalar)
-        # refuses, breaking flag-true-implies-gate-pass.
-        if _pos_num(fallback):
-            return max(valid + [fallback])
-        return max(valid)
-    return fallback if _pos_num(fallback) else None
-
-
-def _settled_stream_probe(calibration: dict) -> float | None:
-    """The POST-suite window of the stream probe — the settled
-    instrument the probe_clean flag judges the stream family on —
-    falling back to the recorded ``stream_probe_s`` (min of windows)
-    when the post window is absent.
-
-    Why post, not worst-of-windows like the scan probe: the stream
-    PRE window runs immediately after the streaming warmup, while the
-    state-store maintenance threads and micro-batch machinery it just
-    spawned are still draining, and that drain — not box load — sets
-    its floor. Measured: across every artifact that records the
-    windows (r06-r10, 14 runs, including loadavg-0.00 boxes and the
-    r9 per-round run judged clean under the old min() rule) the pre
-    window's settle floor is 1.50-1.78 s against the 1.337 s settled
-    pin — it has NEVER read within the 1.05x tolerance, anywhere.
-    Gating probe_clean on worst-of-windows therefore made the flag
-    degenerate (r10: seven strict runs on windows down to loadavg
-    0.01, zero clean — a flag that cannot be true partitions
-    nothing). The post window is the same instrument fully settled;
-    it is >= the recorded min() by construction, so judging it keeps
-    the flag at least as strict as the r9 min() rule while staying
-    satisfiable on a genuinely idle box. The pre window stays in the
-    sidecar artifact as load-arrival evidence (it DOES spike under
-    real waves: 1.78 on the r9 cadence run that read 1.197x)."""
-    v = calibration.get("stream_probe_post_s")
-    if _pos_num(v):
-        return v
-    fallback = calibration.get("stream_probe_s")
-    return fallback if _pos_num(fallback) else None
-
 
 
 def _baseline_calibration_value(key: str, here: str | None = None) -> float | None:
@@ -1325,28 +767,17 @@ def _baseline_sf(here: str | None = None) -> float | None:
 def calibrated_artifact(artifact: dict, calibration: dict, load: dict) -> dict:
     """bench.py's artifact plus the evidence a recording is judged on:
     the probe windows with the standing bars' own probes next to them,
-    the clean-box reference in force, the load block and the top-level
-    ``probe_clean`` flag (scan probe on its worst window, stream probe
-    on its settled post window)."""
-    ref = _clean_probe_reference()
+    the clean-box reference in force and the load block."""
     cal = dict(calibration)
     cal["baseline_s"] = _baseline_probe()
     cal["stream_baseline_s"] = _baseline_stream_probe()
-    cal["clean_probe"] = dict(ref)
-    return dict(
-        artifact,
-        calibration=cal,
-        load=dict(load),
-        probe_clean=probe_clean_flag(
-            _worst_probe(cal, "probe"), _settled_stream_probe(cal), ref
-        ),
-    )
+    cal["clean_probe"] = _clean_probe_reference()
+    return dict(artifact, calibration=cal, load=dict(load))
 
 
 def main() -> int:
     if os.environ.get("SPARK_GRAFT_DERIVE_CLEAN_PROBE"):
         return derive_clean_probe()
-    idle_wait = wait_for_idle(idle_wait_budget_s())
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import __spark_entry__ as entrymod
@@ -1357,17 +788,7 @@ def main() -> int:
     spark = get_spark("ehb-bench")
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
     probe_base = _baseline_probe()
-    probe_admit, probe_pre, probe_pre_series = probe_admission(
-        lambda: calibration_probe(spark, target_s=probe_base),
-        pin_s=_clean_probe_reference()["probe_s"],
-        budget_s=max(
-            0.0, float(idle_wait.get("requested_s") or 0.0) - idle_wait["waited_s"]
-        ),
-        ratio=_admit_ratio_from_env(),
-        reprobe_fn=lambda: calibration_probe(
-            spark, min_reps=2, max_reps=4, target_s=probe_base
-        ),
-    )
+    probe_pre, probe_pre_series = calibration_probe(spark, target_s=probe_base)
     sprobe_base = _baseline_stream_probe()
     sprobe_pre, sprobe_pre_series = streaming_calibration_probe(
         spark, target_s=sprobe_base
@@ -1398,8 +819,6 @@ def main() -> int:
         "loadavg_pre": load_pre,
         "loadavg_post": _loadavg(),
         "cpus": os.cpu_count(),
-        "idle_wait": idle_wait,
-        "probe_admission": probe_admit,
     }
     artifact = calibrated_artifact(
         bench.build_artifact(

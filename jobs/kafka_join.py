@@ -5,10 +5,11 @@ the drop-in replacement for the reference's `sparkpykafkajoin.py`
 --packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>).
 
 Differences from the reference, on purpose:
-- the Kafka sink AND a console sink run CONCURRENTLY (the reference's
-  console sink at sparkpykafkajoin.py:219-221 was dead code behind
-  awaitTermination, SURVEY §2.2) via awaitAnyTermination;
-- every query checkpoints;
+- one streaming query, the Kafka sink: the reference's console sink
+  (sparkpykafkajoin.py:219-221) was dead code behind awaitTermination
+  (SURVEY §2.2), and a second query would keep a second copy of the
+  join's unbounded state;
+- the query checkpoints;
 - maxOffsetsPerTrigger bounds the earliest-replay first batch.
 
 Usage:
@@ -31,7 +32,6 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -70,11 +70,6 @@ def main() -> None:
         "kafka",
         checkpoint_location="/tmp/stedi-risk-checkpoint",
         options=kafka_sink_options("stedi-risk", bootstrap),
-    )
-    start_query(
-        joined,
-        "console",
-        checkpoint_location=tempfile.mkdtemp(prefix="stedi-console-"),
     )
     await_any(spark)
 

@@ -68,16 +68,23 @@ def _fmt(quartiles: list[float]) -> str:
 
 
 def _run(tree: str, command: list[str], workload: str, seed: int, seconds: float) -> dict | None:
-    """One perfbench run in ``tree``: {metric: value}, or None if it failed."""
+    """One perfbench run in ``tree``: {metric: value}, or None if it
+    failed or its last stdout line is not a correct run's JSON object."""
     cmd = command + ["--workload", workload, "--seed", str(seed),
                      "--seconds", str(seconds), "--trace", "0"]
     proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
-    last = json.loads(lines[-1]) if proc.returncode == 0 and lines else {}
-    if not last.get("correct"):
+    metrics = None
+    if proc.returncode == 0 and lines:
+        try:
+            last = json.loads(lines[-1])
+            if last.get("correct"):
+                metrics = {k: v["value"] for k, v in last["metrics"].items()}
+        except (ValueError, AttributeError, KeyError, TypeError):
+            pass  # a malformed last line counts as a failed run
+    if metrics is None:
         print("\n".join(proc.stderr.splitlines()[-5:]), file=sys.stderr)
-        return None
-    return {k: v["value"] for k, v in last["metrics"].items()}
+    return metrics
 
 
 def main() -> int:

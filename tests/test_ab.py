@@ -51,3 +51,26 @@ def test_percentile_is_perfbench_stats():
     import stats
 
     assert ab.percentile is stats.percentile
+
+
+def test_run_counts_a_malformed_last_line_as_failed(monkeypatch):
+    """A run whose exit code is 0 but whose last stdout line is not a
+    correct run's JSON object is one failed run, not an exception that
+    ends the whole A/B."""
+    good = '{"correct": true, "metrics": {"latency_ms": {"value": 5.0}}}'
+    outs = iter([
+        "log line\nnot json",
+        "[1, 2]",
+        '{"correct": true}',
+        '{"correct": true, "metrics": {"latency_ms": 5.0}}',
+        '{"correct": false, "metrics": {}}',
+        good,
+    ])
+
+    def fake_run(cmd, **kwargs):
+        return ab.subprocess.CompletedProcess(cmd, 0, next(outs), "tail\n")
+
+    monkeypatch.setattr(ab.subprocess, "run", fake_run)
+    for _ in range(5):
+        assert ab._run(".", ["run"], "w", 1, 1.0) is None
+    assert ab._run(".", ["run"], "w", 1, 1.0) == {"latency_ms": 5.0}

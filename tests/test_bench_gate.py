@@ -2,9 +2,9 @@
 the fixed regression check against BENCH_BASELINE.json, the last stdout
 line, the BENCH_SELF.json layout, and the teardown order (artifact,
 streams, session, then the metric line). The second half pins
-bench_record.py, the guarded path that re-records the bars: the idle
-wait, the probe admission, the calibration probes' settle and clean
-rules, the clean-probe pin and its derivation, and the record gates."""
+bench_record.py, the guarded path that re-records the bars: its knob
+set, the calibration probes' settle rule, the clean-probe pin and its
+derivation, and the record gates."""
 
 from __future__ import annotations
 
@@ -27,8 +27,7 @@ def _no_ambient_record_knobs(monkeypatch):
     """A shell with a re-record knob exported must not steer the
     record gates under test."""
     for k in ("SPARK_GRAFT_RECORD_BASELINE", "SPARK_GRAFT_BASELINE_FORCE",
-              "SPARK_GRAFT_RECORD_BASELINE_QUERIES", "SPARK_GRAFT_DERIVE_FORCE",
-              "SPARK_GRAFT_PROBE_ADMIT_RATIO", "SPARK_GRAFT_WAIT_IDLE"):
+              "SPARK_GRAFT_DERIVE_FORCE"):
         monkeypatch.delenv(k, raising=False)
 
 
@@ -152,6 +151,31 @@ def test_bench_reads_only_the_data_path_env():
     names = set(re.findall(r"environ(?:\.get)?\(?\[?\"(\w+)\"", src))
     assert names == {"SPARK_GRAFT_SF_DIR"}
     assert "getenv" not in src
+
+
+def test_bench_record_reads_exactly_its_knobs():
+    """bench_record.py's environment surface, counted as string
+    literals rather than ``environ.get`` calls because
+    ``_derivation_vs_standing_error`` reads through an ``env``
+    argument."""
+    import ast
+
+    with open(os.path.join(bench.HERE, "bench_record.py")) as f:
+        tree = ast.parse(f.read())
+    names = {
+        n.value
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and re.fullmatch(r"SPARK_GRAFT_\w+", n.value)
+    }
+    assert names == {
+        "SPARK_GRAFT_RECORD_BASELINE",
+        "SPARK_GRAFT_BASELINE_FORCE",
+        "SPARK_GRAFT_DERIVE_CLEAN_PROBE",
+        "SPARK_GRAFT_DERIVE_FORCE",
+        "SPARK_GRAFT_SF_DIR",
+    }
 
 
 def test_exec_block_is_perfbench_exec_metrics():
@@ -661,127 +685,6 @@ def test_unsettled_series_bar_admits_measured_idle_variance():
     )
 
 
-def test_idle_wait_budget_parsing():
-    """SPARK_GRAFT_WAIT_IDLE defaults ON (bounded) so an
-    env-var-free invocation inherits the idleness protocol — the r07
-    verdict's motivation; unset and unparseable values fall back to
-    the bounded default, and only an explicit non-positive value opts
-    out. Every branch stays finite (never-block guarantee)."""
-    from bench_record import DEFAULT_IDLE_WAIT_S, idle_wait_budget_s
-
-    assert 0.0 < DEFAULT_IDLE_WAIT_S <= 3600.0  # bounded by design
-    assert idle_wait_budget_s({}) == DEFAULT_IDLE_WAIT_S
-    # Set-but-junk falls back to the default rather than silently
-    # disabling the protection a typo meant to tune.
-    assert (
-        idle_wait_budget_s({"SPARK_GRAFT_WAIT_IDLE": "banana"})
-        == DEFAULT_IDLE_WAIT_S
-    )
-    # Explicit non-positive is the opt-out — including -inf, which is
-    # a valid float the pre-default code also mapped to no-wait
-    # (the opt-out check must precede the isfinite
-    # fallback).
-    assert idle_wait_budget_s({"SPARK_GRAFT_WAIT_IDLE": "-5"}) == 0.0
-    assert idle_wait_budget_s({"SPARK_GRAFT_WAIT_IDLE": "0"}) == 0.0
-    assert idle_wait_budget_s({"SPARK_GRAFT_WAIT_IDLE": "-inf"}) == 0.0
-    # A deliberate blank (`SPARK_GRAFT_WAIT_IDLE= python rec.py`,
-    # or an empty interpolated shell variable) is the common idiom
-    # for disabling a knob: opt-out, not a typo.
-    assert idle_wait_budget_s({"SPARK_GRAFT_WAIT_IDLE": ""}) == 0.0
-    assert idle_wait_budget_s({"SPARK_GRAFT_WAIT_IDLE": "  "}) == 0.0
-    assert idle_wait_budget_s({"SPARK_GRAFT_WAIT_IDLE": "600"}) == 600.0
-    # float() accepts 'inf'/'1e400'/'nan': an
-    # infinite budget would make wait_for_idle loop forever on a
-    # loaded box — the never-block guarantee must hold; both fall back
-    # to the bounded default, and any finite budget is capped at one
-    # hour.
-    assert (
-        idle_wait_budget_s({"SPARK_GRAFT_WAIT_IDLE": "inf"})
-        == DEFAULT_IDLE_WAIT_S
-    )
-    assert (
-        idle_wait_budget_s({"SPARK_GRAFT_WAIT_IDLE": "1e400"})
-        == DEFAULT_IDLE_WAIT_S
-    )
-    assert (
-        idle_wait_budget_s({"SPARK_GRAFT_WAIT_IDLE": "nan"})
-        == DEFAULT_IDLE_WAIT_S
-    )
-    assert idle_wait_budget_s({"SPARK_GRAFT_WAIT_IDLE": "7200"}) == 3600.0
-
-
-def test_wait_for_idle_already_idle_returns_immediately():
-    """An idle box (1-min loadavg under the FORCE bar) must not sleep
-    at all — the wait is for load waves, not a fixed delay."""
-    from bench_record import wait_for_idle
-
-    slept: list[float] = []
-    out = wait_for_idle(
-        600.0,
-        cpus=32,
-        loadavg_fn=lambda: [0.45, 0.7, 1.7],
-        sleep_fn=slept.append,
-    )
-    assert out["satisfied"] is True
-    assert out["waited_s"] == 0.0 and slept == []
-    assert out["bar"] == pytest.approx(3.2)
-
-
-def test_wait_for_idle_waits_out_a_load_wave():
-    """The r07 bench artifact's loadavg-6.55 window: the wait polls
-    until the wave passes, then releases the suite with the improved
-    window recorded."""
-    from bench_record import wait_for_idle
-
-    series = [[6.55, 5.0, 4.0], [5.2, 5.0, 4.1], [2.9, 4.2, 4.0]]
-    calls = {"n": 0}
-
-    def fake_loadavg():
-        la = series[min(calls["n"], len(series) - 1)]
-        calls["n"] += 1
-        return la
-
-    slept: list[float] = []
-    out = wait_for_idle(
-        600.0, poll_s=5.0, cpus=32, loadavg_fn=fake_loadavg,
-        sleep_fn=slept.append,
-    )
-    assert out["satisfied"] is True
-    assert out["loadavg_first"] == 6.55 and out["loadavg_last"] == 2.9
-    assert out["polls"] == 3 and slept == [5.0, 5.0]
-    assert out["waited_s"] == 10.0
-
-
-def test_wait_for_idle_refusal_is_bounded_and_documented(capsys):
-    """A wave that outlasts the budget must NOT block the caller:
-    the wait gives up at the budget, logs the refusal, and the
-    artifact records satisfied=False for the judge."""
-    from bench_record import wait_for_idle
-
-    slept: list[float] = []
-    out = wait_for_idle(
-        12.0, poll_s=5.0, cpus=32, loadavg_fn=lambda: [8.0, 7.0, 6.0],
-        sleep_fn=slept.append,
-    )
-    assert out["satisfied"] is False
-    assert out["waited_s"] == pytest.approx(12.0)
-    assert slept == [5.0, 5.0, 2.0]  # bounded: never sleeps past budget
-    assert "WAIT_IDLE REFUSED" in capsys.readouterr().err
-
-
-def test_wait_for_idle_zero_budget_never_sleeps():
-    """With the explicit opt-out (SPARK_GRAFT_WAIT_IDLE=0 → budget 0)
-    a loaded box proceeds straight to the suite without sleeping."""
-    from bench_record import wait_for_idle
-
-    slept: list[float] = []
-    out = wait_for_idle(
-        0.0, cpus=32, loadavg_fn=lambda: [8.0, 7.0, 6.0],
-        sleep_fn=slept.append,
-    )
-    assert out["satisfied"] is False and slept == []
-
-
 def test_artifact_surfaces_clean_probe_reference(monkeypatch):
     """VERDICT r07 item 5: the clean-probe reference the record gate
     judges against must be visible in every calibrated artifact
@@ -838,108 +741,6 @@ def test_recorded_baseline_carries_the_enforced_clean_probe(tmp_path, monkeypatc
     assert cp == {"probe_s": 0.412, "stream_probe_s": 1.931, "derived": True}
 
 
-def test_wait_for_idle_refuses_the_eye_of_a_wave():
-    """Measured failure (SCALING.md r08): the 1-minute average dipped
-    to 3.03 mid-wave while the 5-minute average was still 6.55; the
-    wait released and the suite ran straight into the wave's
-    resumption. The release condition now also requires the 5-minute
-    average under 2x the bar."""
-    from bench_record import wait_for_idle
-
-    series = [
-        [3.03, 6.55, 4.40],  # the live mid-wave dip: la5 still hot
-        [2.90, 6.50, 4.40],
-        [0.90, 2.10, 3.00],  # the wave genuinely over
-    ]
-    calls = {"n": 0}
-
-    def fake_loadavg():
-        la = series[min(calls["n"], len(series) - 1)]
-        calls["n"] += 1
-        return la
-
-    slept: list[float] = []
-    out = wait_for_idle(
-        600.0, poll_s=5.0, cpus=32, loadavg_fn=fake_loadavg,
-        sleep_fn=slept.append,
-    )
-    assert out["satisfied"] is True
-    assert out["polls"] == 3  # the two mid-wave dips did NOT release
-    assert out["loadavg_last"] == 0.90
-
-
-def test_probe_clean_flag_truth_table():
-    """VERDICT r08 item 6: the probe-clean partition is a pure
-    predicate — both probes within the ratio of their clean-box pins;
-    a missing probe is NOT clean (no evidence is not evidence of
-    idleness)."""
-    ref = {"probe_s": 1.0, "stream_probe_s": 2.0}
-    assert rec.probe_clean_flag(1.04, 2.08, ref, max_ratio=1.05) is True
-    assert rec.probe_clean_flag(1.06, 2.0, ref, max_ratio=1.05) is False
-    assert rec.probe_clean_flag(1.0, 2.2, ref, max_ratio=1.05) is False
-    assert rec.probe_clean_flag(None, 2.0, ref) is False
-    assert rec.probe_clean_flag(1.0, None, ref) is False
-    assert rec.probe_clean_flag(0.0, 2.0, ref) is False
-
-
-def test_artifact_probe_clean_field(monkeypatch):
-    """The artifact says probe_clean itself (VERDICT r08 item 6) —
-    true when both probes sit within BASELINE_MAX_PROBE_RATIO of the
-    clean-probe reference, false otherwise."""
-    monkeypatch.setattr(
-        rec,
-        "_clean_probe_reference",
-        lambda here=None: {
-            "probe_s": 1.0,
-            "stream_probe_s": 2.0,
-            "derived": False,
-        },
-    )
-    for probe, sprobe, want in [(1.0, 2.0, True), (1.2, 2.0, False)]:
-        art = rec.calibrated_artifact(
-            _artifact({"q": 1.0}),
-            {"probe_s": probe, "stream_probe_s": sprobe},
-            {},
-        )
-        assert art["probe_clean"] is want
-
-
-def test_worst_probe_junk_window_cannot_hide_behind_quiet_one():
-    """ADVICE r10: with exactly one valid window and one PRESENT-but-
-    junk window, _worst_probe used to return the lone valid window —
-    a corrupt loaded window let the quiet one mark the run clean, and
-    a recorded scalar above the survivor broke the 'flag-true implies
-    gate-pass' invariant. Junk windows now fold the recorded scalar
-    back in (max), and with nothing valid left the probe is missing,
-    not clean."""
-    # Quiet valid pre + junk post + larger recorded scalar: the scalar
-    # must win (gate judges it; the flag may not read below the gate).
-    assert rec._worst_probe(
-        {"probe_s": 0.5, "probe_pre_s": 0.35, "probe_post_s": True}, "probe"
-    ) == 0.5
-    # Junk window with the surviving window ABOVE the scalar: keep the
-    # worse (max) of the two.
-    assert rec._worst_probe(
-        {"probe_s": 0.4, "probe_pre_s": -3.0, "probe_post_s": 0.6}, "probe"
-    ) == 0.6
-    # Junk window and junk scalar: no evidence is not evidence of
-    # idleness.
-    assert rec._worst_probe(
-        {"probe_s": True, "probe_pre_s": 0.35, "probe_post_s": float("nan")},
-        "probe",
-    ) is None
-    # Both windows ABSENT (old artifacts) still falls back to the
-    # scalar; with one window absent and one valid the scalar folds
-    # into the max too (ADVICE r11: probe_s is min(pre,post) by
-    # construction so this is a no-op on consistent artifacts, but a
-    # hand-fed scalar ABOVE the lone surviving window must not let
-    # probe_clean read true while the record gate judging the scalar
-    # fails).
-    assert rec._worst_probe({"probe_s": 0.4}, "probe") == 0.4
-    assert rec._worst_probe({"probe_s": 0.4, "probe_post_s": 0.37}, "probe") == 0.4
-    assert rec._worst_probe({"probe_s": 0.3, "probe_post_s": 0.37}, "probe") == 0.37
-
-
 def test_baseline_record_refuses_sf_mismatch(tmp_path, monkeypatch, capsys):
     """A recording at a different scale factor than the
     standing baseline silently re-anchors every per-query bar to a
@@ -967,255 +768,6 @@ def test_baseline_record_refuses_sf_mismatch(tmp_path, monkeypatch, capsys):
     assert rec.maybe_record_baseline(no_sf, here=str(tmp_path)) == 1
     assert "sf=unknown against a standing sf=0.1" in capsys.readouterr().err
     assert not (tmp_path / "BENCH_BASELINE.json").exists()
-
-
-def test_probe_pickers_reject_junk_fallback_scalars():
-    """The windowed paths validated pre/post values but both
-    fallbacks passed the recorded scalar through unvalidated — a
-    junk probe_s (JSON true, a negative, inf) reached probe_clean_flag
-    where a negative ratio compares 'clean'."""
-    for junk in (True, -1.0, 0, float("inf"), float("nan"), "fast"):
-        assert rec._worst_probe({"probe_s": junk}, "probe") is None
-        assert rec._settled_stream_probe({"stream_probe_s": junk}) is None
-    assert rec._worst_probe({}, "probe") is None
-    assert rec._settled_stream_probe({}) is None
-
-
-def test_probe_clean_judged_on_worst_window(monkeypatch):
-    """ADVICE r09: probe_s is min(pre, post), so a run whose post
-    window caught a load wave used to read probe_clean=true. The flag
-    judges the SCAN probe's worst window (symmetric instrument) and
-    the STREAM probe's settled POST window — its pre window is
-    structurally warmup-confounded (measured floor 1.50-1.78 vs the
-    1.337 pin on 14/14 recorded artifacts including idle boxes, so a
-    worst-window stream gate can never pass; r10 deconfound). A
-    single-probe calibration (no pre/post detail) falls back to
-    probe_s / stream_probe_s."""
-    monkeypatch.setattr(
-        rec, "_clean_probe_reference",
-        lambda here=None: {"probe_s": 1.0, "stream_probe_s": 2.0,
-                           "derived": False},
-    )
-
-    def flag_for(cal):
-        return rec.calibrated_artifact(_artifact({"q": 1.0}), cal, {})["probe_clean"]
-
-    # Clean scan pre window, loaded scan post window: min() says
-    # clean, worst window says NOT clean.
-    assert flag_for({"probe_s": 1.0, "probe_pre_s": 1.0, "probe_post_s": 1.4,
-                     "stream_probe_s": 2.0}) is False
-    # Both windows clean on both probes -> clean.
-    assert flag_for({"probe_s": 1.0, "probe_pre_s": 1.02, "probe_post_s": 1.0,
-                     "stream_probe_s": 2.0, "stream_probe_pre_s": 2.04,
-                     "stream_probe_post_s": 2.0}) is True
-    # Stream post window loaded -> not clean (post IS the judged
-    # window, and it is >= the recorded min by construction).
-    assert flag_for({"probe_s": 1.0, "stream_probe_s": 2.0,
-                     "stream_probe_pre_s": 2.0,
-                     "stream_probe_post_s": 2.3}) is False
-    # Warmup-confounded stream PRE window with a settled clean post:
-    # clean — the exact shape every idle-box run records (r10: pre
-    # 1.5-1.66 vs pin 1.337 on loadavg-0.00 windows), which a
-    # worst-window stream gate mis-read as load.
-    assert flag_for({"probe_s": 1.0, "probe_pre_s": 1.0, "probe_post_s": 1.0,
-                     "stream_probe_s": 2.0, "stream_probe_pre_s": 2.4,
-                     "stream_probe_post_s": 2.02}) is True
-    # Fallback: no window detail, judged on probe_s itself.
-    assert flag_for({"probe_s": 1.0, "stream_probe_s": 2.0}) is True
-    assert rec._worst_probe({"probe_s": 0.4}, "probe") == 0.4
-    assert rec._worst_probe(
-        {"probe_s": 0.4, "probe_pre_s": 0.5, "probe_post_s": 0.45}, "probe"
-    ) == 0.5
-    # _settled_stream_probe: post window when present, else the
-    # recorded scalar; junk post values fall through.
-    assert rec._settled_stream_probe(
-        {"stream_probe_s": 1.3, "stream_probe_pre_s": 1.6,
-         "stream_probe_post_s": 1.35}
-    ) == 1.35
-    assert rec._settled_stream_probe({"stream_probe_s": 1.3}) == 1.3
-    assert rec._settled_stream_probe(
-        {"stream_probe_s": 1.3, "stream_probe_post_s": True}
-    ) == 1.3
-    assert rec._settled_stream_probe(
-        {"stream_probe_s": 1.3, "stream_probe_post_s": 0.0}
-    ) == 1.3
-
-
-def _fake_probe_seq(mins):
-    """A probe_fn whose successive calls return the given settled
-    mins (series = [min] for brevity); records call count."""
-    calls = {"n": 0}
-
-    def fn():
-        i = min(calls["n"], len(mins) - 1)
-        calls["n"] += 1
-        return mins[i], [mins[i]]
-
-    fn.calls = calls
-    return fn
-
-
-class _FakeClock:
-    """Deterministic clock: advances only via explicit sleep."""
-
-    def __init__(self):
-        self.t = 0.0
-
-    def __call__(self):
-        return self.t
-
-    def sleep(self, s):
-        self.t += s
-
-
-def test_probe_admission_truth_table():
-    """The admission truth table (VERDICT r12 item 1): clean first
-    probe releases immediately; a dirty probe retries on the poll
-    cadence within the budget and releases the moment a window reads
-    clean; budget exhaustion proceeds with satisfied=False (never
-    block); a missing pin judges nothing (satisfied=None)."""
-    pin = 0.454
-    bar = rec.PROBE_ADMIT_RATIO * pin
-
-    # 1. Clean first window: one attempt, no waiting.
-    clk = _FakeClock()
-    ev, best, series = rec.probe_admission(
-        _fake_probe_seq([0.46]), pin, 600.0, sleep_fn=clk.sleep, clock=clk
-    )
-    assert ev["satisfied"] is True
-    assert ev["attempts"] == 1 and ev["attempt_mins"] == [0.46]
-    assert best == 0.46 and series == [0.46]
-    assert ev["bar_s"] == round(bar, 3)
-
-    # 2. Dirty then clean: retries until the clean window, returns
-    #    the ADMITTED window's value (the one the suite enters).
-    clk = _FakeClock()
-    fn = _fake_probe_seq([2.0, 1.1, 0.45])
-    ev, best, series = rec.probe_admission(
-        fn, pin, 600.0, sleep_fn=clk.sleep, clock=clk
-    )
-    assert ev["satisfied"] is True
-    assert ev["attempts"] == 3 and fn.calls["n"] == 3
-    assert ev["attempt_mins"] == [2.0, 1.1, 0.45]
-    assert best == 0.45
-
-    # 3. Never clean: bounded retries, refusal recorded, proceeds —
-    #    and the budget bounds the wall (poll 20s → ~30 attempts in
-    #    600s, never an unbounded loop).
-    clk = _FakeClock()
-    fn = _fake_probe_seq([3.0])
-    ev, best, series = rec.probe_admission(
-        fn, pin, 100.0, sleep_fn=clk.sleep, clock=clk
-    )
-    assert ev["satisfied"] is False
-    assert best == 3.0
-    assert ev["waited_s"] <= 100.0 + rec.PROBE_ADMIT_POLL_S
-    assert ev["attempts"] == fn.calls["n"] >= 2
-
-    # 4. Zero budget + dirty: single probe, immediate refusal.
-    clk = _FakeClock()
-    ev, best, _ = rec.probe_admission(
-        _fake_probe_seq([3.0]), pin, 0.0, sleep_fn=clk.sleep, clock=clk
-    )
-    assert ev["satisfied"] is False and ev["attempts"] == 1
-
-    # 5. No pin (None / junk): nothing to judge — one probe,
-    #    satisfied stays None (absence of a bar is not cleanliness).
-    for junk in (None, 0.0, True, float("nan")):
-        clk = _FakeClock()
-        ev, best, _ = rec.probe_admission(
-            _fake_probe_seq([3.0]), junk, 600.0, sleep_fn=clk.sleep, clock=clk
-        )
-        assert ev["satisfied"] is None and ev["attempts"] == 1
-        assert ev["pin_s"] is None and ev["bar_s"] is None
-
-
-def test_probe_admission_budget_counts_probe_time():
-    """The never-block bound must count the probes' own wall, not
-    just the sleeps — on a loaded box each settled probe can itself
-    take tens of seconds (r12: a 23 s probe rep), and a sleep-only
-    budget would overrun by attempts x probe-cost."""
-    clk = _FakeClock()
-
-    def slow_probe():
-        clk.sleep(50.0)  # each probe costs 50s of wall
-        return 3.0, [3.0]
-
-    ev, _, _ = rec.probe_admission(
-        slow_probe, 0.454, 120.0, sleep_fn=clk.sleep, clock=clk
-    )
-    assert ev["satisfied"] is False
-    # 50 (probe) + 20 (poll) + 50 (probe) + 20 (poll) = 140 > 120:
-    # the loop must stop by then, not keep probing.
-    assert ev["attempts"] <= 3
-    assert clk.t <= 120.0 + rec.PROBE_ADMIT_POLL_S + 50.0
-
-
-def test_admit_ratio_env_override():
-    """VERDICT r15 item 1 support: a tightening campaign can demand a
-    stricter admission bar (SPARK_GRAFT_PROBE_ADMIT_RATIO) so runs
-    hold out for near-pin windows instead of burning a suite run on a
-    warm window's stamp-only patch. Default unchanged; garbage values
-    fall back loudly rather than gating on nonsense."""
-    assert rec._admit_ratio_from_env(env={}) == rec.PROBE_ADMIT_RATIO
-    assert rec._admit_ratio_from_env(
-        env={"SPARK_GRAFT_PROBE_ADMIT_RATIO": ""}
-    ) == rec.PROBE_ADMIT_RATIO
-    assert rec._admit_ratio_from_env(
-        env={"SPARK_GRAFT_PROBE_ADMIT_RATIO": "1.02"}
-    ) == 1.02
-    for garbage in ("nope", "0", "-3"):
-        assert rec._admit_ratio_from_env(
-            env={"SPARK_GRAFT_PROBE_ADMIT_RATIO": garbage}
-        ) == rec.PROBE_ADMIT_RATIO
-
-
-def test_probe_admission_retries_use_light_reprobe():
-    """Retry attempts must run the cheap window-sample probe, not the
-    full 12-rep settle barrier (r13 smoke: one full settle probe on a
-    loaded window burned 190 s of budget in a single attempt)."""
-    clk = _FakeClock()
-    full = _fake_probe_seq([3.0])
-    light = _fake_probe_seq([2.0, 0.45])
-    ev, best, series = rec.probe_admission(
-        full, 0.454, 600.0, sleep_fn=clk.sleep, clock=clk, reprobe_fn=light
-    )
-    assert full.calls["n"] == 1          # settle barrier ran exactly once
-    assert light.calls["n"] == 2         # retries on the light probe
-    assert ev["satisfied"] is True
-    assert ev["attempt_mins"] == [3.0, 2.0, 0.45]
-    assert best == 0.45                  # admitted window's value
-
-
-def test_probe_admission_no_pin_records_waited():
-    """ADVICE r13 (rec.py probe_admission): the no-pin early return
-    must still stamp waited_s with the mandatory first probe's wall —
-    the docstring promises 'waited_s is the wall from admission
-    start, INCLUDING the mandatory first probe' on EVERY path."""
-    clk = _FakeClock()
-
-    def slow_probe():
-        clk.sleep(7.0)
-        return 3.0, [3.0]
-
-    ev, _, _ = rec.probe_admission(
-        slow_probe, None, 600.0, sleep_fn=clk.sleep, clock=clk
-    )
-    assert ev["satisfied"] is None
-    assert ev["waited_s"] == 7.0
-
-
-def test_probe_admission_zero_budget_refusal_is_logged(capsys):
-    """ADVICE r13: a dirty first probe with budget_s already 0 (the
-    idle wait ate it) is a refusal and must print PROBE_ADMISSION
-    REFUSED — stderr must match the artifact's satisfied=False on
-    every refusal path, not only the retry one."""
-    clk = _FakeClock()
-    ev, _, _ = rec.probe_admission(
-        _fake_probe_seq([3.0]), 0.454, 0.0, sleep_fn=clk.sleep, clock=clk
-    )
-    assert ev["satisfied"] is False
-    assert "PROBE_ADMISSION REFUSED" in capsys.readouterr().err
 
 
 def test_derivation_vs_standing_guard():
@@ -1287,61 +839,6 @@ def test_record_vs_standing_ratchet_guard():
     assert rec._record_vs_standing_error({}, standing) is None
 
 
-def test_patch_baseline_queries_tightens_never_loosens(tmp_path, capsys):
-    """VERDICT r13 item 2: the reps-parity patch updates ONLY the
-    named queries, only DOWNWARD (min(observed, standing)), merges
-    their reps_overrides, recomputes the sum, and appends a
-    provenance record — so the parity stamp can never reintroduce
-    the full-record ratchet."""
-    path = str(tmp_path / "BENCH_BASELINE.json")
-    standing = {
-        "value": 4.0,
-        "queries": {"qa": 2.0, "qb": 1.0, "qc": 1.0},
-        "reps_overrides": {"qc": 5},
-        "calibration": {"probe_s": 0.335},
-    }
-    with open(path, "w") as f:
-        json.dump(standing, f)
-
-    artifact = {
-        "sf": 0.1,
-        "queries": {"qa": 1.8, "qb": 1.4, "qc": 0.9},
-        "reps_overrides": {"qa": 5, "qb": 5},
-        "calibration": {"probe_s": 0.41, "stream_probe_s": 1.6},
-        "load": {"loadavg_pre": [0.5, 1.0, 1.5]},
-    }
-    ref = {"probe_s": 0.406, "stream_probe_s": 1.576, "derived": True}
-    rc = rec._patch_baseline_queries(artifact, "qa,qb", path, ref)
-    assert rc == 0
-    out = json.load(open(path))
-    # qa tightened 2.0 -> 1.8; qb observed 1.4 ABOVE standing 1.0:
-    # stamped at the floor, NOT loosened.
-    assert out["queries"] == {"qa": 1.8, "qb": 1.0, "qc": 1.0}
-    assert out["value"] == 3.8
-    # reps parity stamped for the named queries; qc's survives.
-    assert out["reps_overrides"] == {"qa": 5, "qb": 5, "qc": 5}
-    p = out["patches"][-1]
-    assert p["patched"] == {"qa": {"from": 2.0, "to": 1.8}}
-    assert p["stamped"] == {"qb": {"standing": 1.0, "observed": 1.4}}
-    assert p["clean_probe"] == ref and p["sf"] == 0.1
-    assert "BASELINE PATCHED" in capsys.readouterr().err
-
-    # Refusals: a query absent from the recording or the standing
-    # baseline, and a missing standing file.
-    assert rec._patch_baseline_queries(artifact, "nope", path, ref) == 1
-    assert "not in this recording" in capsys.readouterr().err
-    artifact2 = dict(artifact, queries={"zz": 1.0})
-    assert rec._patch_baseline_queries(artifact2, "zz", path, ref) == 1
-    assert "not in the standing baseline" in capsys.readouterr().err
-    assert (
-        rec._patch_baseline_queries(
-            artifact, "qa", str(tmp_path / "missing.json"), ref
-        )
-        == 1
-    )
-    assert "no readable standing baseline" in capsys.readouterr().err
-
-
 def test_derivation_bounded_by_pinned_constants():
     """ADVICE r14: once CLEAN_PROBE.json stands, the standing reference
     IS the previous derivation, so judging only against it compounds
@@ -1371,53 +868,3 @@ def test_derivation_bounded_by_pinned_constants():
         )
         is None
     )
-
-
-def test_patch_baseline_updates_sibling_fields(tmp_path, capsys):
-    """ADVICE r14 + r15: a tightening patch recomputes value but used
-    to leave comparable.sum_now and wall_s describing the PRE-patch
-    recording. The r14 fix set sum_now = value, but sum_now is a
-    GATED-subset sum (queries present in the then-prior baseline) —
-    equating it with the full-suite value conflates the two whenever
-    the standing baseline carries an entry the prior baseline lacked
-    (ADVICE r15). Neither field is recomputable across mixed
-    vintages, so BOTH comparable and wall_s are dropped and the drops
-    recorded; a stamp-only patch changes no value so nothing moves."""
-    path = str(tmp_path / "BENCH_BASELINE.json")
-    standing = {
-        "value": 4.0,
-        "wall_s": 86.1,
-        "comparable": {"queries": 3, "sum_now": 4.0, "sum_baseline": 5.0},
-        "queries": {"qa": 2.0, "qb": 1.0, "qc": 1.0},
-        "reps_overrides": {},
-    }
-    with open(path, "w") as f:
-        json.dump(standing, f)
-    ref = {"probe_s": 0.406, "stream_probe_s": 1.576, "derived": True}
-
-    # Stamp-only patch first: observed above standing -> no tightening,
-    # siblings untouched (they are not stale).
-    stamp_art = {
-        "sf": 0.1,
-        "queries": {"qa": 2.5},
-        "reps_overrides": {"qa": 5},
-        "calibration": {},
-        "load": {},
-    }
-    assert rec._patch_baseline_queries(stamp_art, "qa", path, ref) == 0
-    out = json.load(open(path))
-    assert out["value"] == 4.0 and out["wall_s"] == 86.1
-    assert out["comparable"]["sum_now"] == 4.0
-    assert out["patches"][-1]["dropped_stale"] == []
-
-    # Tightening patch: qa 2.0 -> 1.8; value moves, the stale
-    # single-recording views (comparable, wall_s) are dropped and the
-    # drops are in the provenance record.
-    tighten_art = dict(stamp_art, queries={"qa": 1.8})
-    assert rec._patch_baseline_queries(tighten_art, "qa", path, ref) == 0
-    out = json.load(open(path))
-    assert out["value"] == 3.8
-    assert "comparable" not in out
-    assert "wall_s" not in out
-    assert out["patches"][-1]["dropped_stale"] == ["comparable", "wall_s"]
-    capsys.readouterr()

@@ -502,6 +502,16 @@ def test_job_entrypoints_importable_and_wired():
         tree = ast.parse(j.read_text())
         funcs = {n.name for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)}
         assert "main" in funcs, j
+        if j.name == "kafka_join.py":
+            # One stateful query: a second sink over the same join would
+            # keep a second copy of its unbounded state.
+            starts = [
+                n for n in ast.walk(tree)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Name)
+                and n.func.id == "start_query"
+            ]
+            assert len(starts) == 1, j
 
 
 def test_sketch_aggregates_within_error_bounds(spark, sf_dir):
